@@ -2,11 +2,10 @@
 
 ``queries()`` maps every implemented operator family (SURVEY.md §2 +
 training-data ops) to a DataFrame demo over the driver's synthetic
-tables; ``oracle_sql()`` provides the DuckDB-equivalent SQL. Operators
-whose semantics are not SQL-expressible (minhash/simhash/LSH, crawl
-rounds) appear without an oracle → rows-only check; their real
-correctness gates are tests/ (golden-fixture byte parity, crawl-order
-equivalence).
+tables; ``oracle_sql()`` provides the DuckDB-equivalent SQL for every
+one of them (approximate operators — LSH, IVF, crawl rounds — are
+replicated step by step in SQL). Byte parity with the reference engine
+is gated separately in tests/ (golden fixtures, crawl-order equivalence).
 """
 
 from __future__ import annotations
@@ -76,20 +75,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_anchor_text": _anchor_text,
         "crawl_sitemap_frontier": _sitemap_frontier,
         "detail_page_join": relational.detail_page_join,
-        "frontier_anti_join": relational.frontier_anti_join,
         "politeness_topk": relational.politeness_topk,
         "squash_min_count": relational.squash_min_count,
         "static_field_filter": relational.static_field_filter,
         "guess_year_scan": relational.guess_year_scan,
-        "visited_dedup": relational.visited_dedup,
-        "frontier_merge_min_priority": relational.frontier_merge_min_priority,
         "pagination_union": relational.pagination_union,
         # dedup family — every near-dup query is CANDIDATES (bounded LSH
         # banding / capped posting-list) → EXACT verification, so the
         # result is oracle-checkable against DuckDB's all-pairs exact
         # similarity (banding recall is 1 at sf0.01, by measurement)
         "dedup_exact": dedup.exact_dedup,
-        "dedup_char_jaccard": dedup.char_jaccard_pairs,
         "dedup_char_jaccard_lsh": dedup.char_jaccard_lsh_pairs,
         "dedup_ngram_jaccard": dedup.ngram_jaccard_pairs,
         "dedup_minhash_lsh": dedup.minhash_lsh_pairs,
@@ -103,7 +98,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # similarity search
         "ann_cosine_topk": similarity.cosine_topk,
         "ann_lsh_topk": similarity.ann_lsh_topk,
-        "ann_ivf_topk": similarity.ivf_topk,
         # production IVF: Lloyd-trained coarse centroids (3 distributed
         # k-means iterations; per-iteration means rounded to 6 dp — the
         # documented cross-engine determinism hook that lets the DuckDB
@@ -145,8 +139,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # composed training-data-prep pipeline (dedup → lang gate →
         # quality gate → token accounting as ONE Catalyst plan)
         "pipeline_training_prep": trainprep.training_prep,
-        # multimodal plumbing (oracle-checkable fragment)
-        "multimodal_binary_meta": multimodal.documents_as_binary,
         # composed multimodal demo: asset table → decode/feature extract
         # (Arrow mapInPandas) → banded ANN candidates → exact cosine
         # verify — image near-dup pairs, fully oracle-checked via the
@@ -523,8 +515,8 @@ def _ivf_trained_oracle(n_cells: int = 8, n_probe: int = 2, n_iter: int = 3,
                         k: int = 10, query_id: int = 0,
                         round_digits: int = 6) -> str:
     """SQL replica of similarity.ivf_trained_topk: Lloyd unrolled via
-    _lloyd_chain_ctes; probe selection and final ranking replicate
-    ivf_topk's oracle."""
+    _lloyd_chain_ctes, then first-wins nearest-cell assignment, the
+    query's ``n_probe`` nearest cells and a cosine top-k over them."""
     ctes = [_lloyd_chain_ctes(n_cells, n_iter, round_digits)]
     return f"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -881,11 +873,6 @@ def oracle_sql() -> dict[str, str]:
                    p_name AS part__name, p_brand AS part__brand
             FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
         """,
-        "frontier_anti_join": """
-            SELECT o_orderkey, o_custkey, o_totalprice AS totalprice
-            FROM orders o
-            WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-        """,
         "politeness_topk": """
             SELECT o_custkey, o_orderkey, totalprice, visit_rank FROM (
                 SELECT o_custkey, o_orderkey, o_totalprice AS totalprice,
@@ -911,20 +898,6 @@ def oracle_sql() -> dict[str, str]:
                    (epoch_ms(ts) // 1000) - LAG((epoch_ms(ts) // 1000)) OVER (
                        PARTITION BY user_id ORDER BY ts, event_id) AS gap_sec
             FROM events
-        """,
-        "visited_dedup": """
-            SELECT user_id, event_type,
-                   MIN((epoch_ms(ts) // 1000)) AS first_ts_sec,
-                   COUNT(*) AS n_visits
-            FROM events GROUP BY user_id, event_type
-        """,
-        "frontier_merge_min_priority": """
-            SELECT user_id, first_event_id, first_ts_sec FROM (
-                SELECT user_id, event_id AS first_event_id,
-                       MIN((epoch_ms(ts) // 1000)) OVER (PARTITION BY user_id) AS first_ts_sec,
-                       ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-                FROM events)
-            WHERE rn = 1
         """,
         "pagination_union": """
             SELECT o_orderkey, o_custkey, o_orderpriority AS priority FROM orders
@@ -1057,33 +1030,6 @@ def oracle_sql() -> dict[str, str]:
         "ann_lsh_topk": _ann_lsh_oracle(),
         # Lloyd iterations unrolled as SQL — see _ivf_trained_oracle
         "ann_ivf_trained_topk": _ivf_trained_oracle(),
-        "ann_ivf_topk": """
-            WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-            n AS (SELECT vec_id, v, sqrt(list_dot_product(v, v)) AS nrm FROM e),
-            c AS (SELECT vec_id AS cell, v AS cv, nrm AS cnrm FROM n WHERE vec_id < 8),
-            sims AS (SELECT n.vec_id, c.cell,
-                            list_dot_product(n.v, c.cv) / (n.nrm * c.cnrm) AS sim
-                     FROM n CROSS JOIN c),
-            assign AS (SELECT vec_id, cell FROM (
-                           SELECT vec_id, cell,
-                                  ROW_NUMBER() OVER (PARTITION BY vec_id
-                                      ORDER BY sim DESC, cell ASC) AS rn
-                           FROM sims)
-                       WHERE rn = 1),
-            probe AS (SELECT cell FROM (
-                          SELECT cell, ROW_NUMBER() OVER (ORDER BY sim DESC, cell ASC) AS rn
-                          FROM sims WHERE vec_id = 0)
-                      WHERE rn <= 2),
-            q AS (SELECT v AS qv, nrm AS qnrm FROM n WHERE vec_id = 0)
-            SELECT vec_id, rank FROM (
-                SELECT n.vec_id,
-                       CAST(ROW_NUMBER() OVER (
-                           ORDER BY list_dot_product(n.v, q.qv) / (n.nrm * q.qnrm) DESC,
-                                    n.vec_id ASC) AS INTEGER) AS rank
-                FROM n JOIN assign a ON a.vec_id = n.vec_id, q
-                WHERE a.cell IN (SELECT cell FROM probe) AND n.vec_id <> 0)
-            WHERE rank <= 10
-        """,
         "text_doc_fingerprint": """
             WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS ws
                        FROM documents),
@@ -1104,17 +1050,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(len(fp) AS INTEGER) AS n_fingerprints,
                    fp[1] AS min_fingerprint
             FROM f
-        """,
-        "dedup_char_jaccard": """
-            WITH c AS (
-                SELECT doc_id, source, list_distinct(string_split(text, '')) AS chars
-                FROM documents)
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   ROUND(CAST(len(list_intersect(a.chars, b.chars)) AS DOUBLE)
-                         / len(list_distinct(list_concat(a.chars, b.chars))), 4) AS jaccard
-            FROM c a JOIN c b ON a.source = b.source AND a.doc_id < b.doc_id
-            WHERE CAST(len(list_intersect(a.chars, b.chars)) AS DOUBLE)
-                  / len(list_distinct(list_concat(a.chars, b.chars))) >= 0.92
         """,
         "ann_cosine_topk": """
             SELECT vec_id, rank FROM (
@@ -1483,12 +1418,6 @@ def oracle_sql() -> dict[str, str]:
                         WHEN fr > 0 THEN 'fr'
                         ELSE 'und' END) = 'en'
               AND n_tokens >= 10 AND n_stopwords >= 1
-        """,
-        "multimodal_binary_meta": """
-            SELECT doc_id,
-                   CAST(octet_length(CAST(text AS BLOB)) AS INTEGER) AS n_bytes,
-                   md5(text) AS payload_md5
-            FROM documents
         """,
         # sequential pure-Python feature replica embedded as VALUES →
         # all-pairs exact cosine (see _multimodal_embed_dedup_oracle)

@@ -24,16 +24,14 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from goskyr_spark.spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 CORPUS_HOSTS = int(os.environ.get("SPARK_GRAFT_BENCH_HOSTS", "100"))
 
 BENCH_QUERIES = [
     "merge_key_join",
-    "frontier_anti_join",
     "politeness_topk",
     "squash_min_count",
     "guess_year_scan",
-    "visited_dedup",
     "dedup_exact",
     "dedup_minhash_lsh",
     "dedup_clusters",
@@ -46,7 +44,6 @@ BENCH_QUERIES = [
     "dedup_substring_spans",
     "ann_cosine_topk",
     "ann_lsh_topk",
-    "ann_ivf_topk",
     "ann_ivf_trained_topk",
     "pipeline_training_prep",
     "text_token_counts",
@@ -89,7 +86,7 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, list[float]]]:
     qs = entrymod.queries()
     # session warmup (JVM/codegen/python-worker startup) so the first
     # timed query is not charged for it
-    force(qs["visited_dedup"](spark, SF_DIR))
+    force(qs["politeness_topk"](spark, SF_DIR))
     out = {}
     # the corpus-adjacent intermediate tables (shingles, simhash
     # fingerprints) are write-once per corpus and shared by the whole
@@ -129,9 +126,7 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, list[float]]]:
     return out, raw
 
 
-def bench_crawl(
-    spark, spec=None, metrics: str = "fast"
-) -> tuple[float, int, float, list[float]]:
+def bench_crawl(spark, spec=None) -> tuple[float, int, float, list[float]]:
     """Full crawl to completion on a deterministic corpus; returns
     (urls_per_sec_per_core, urls, min_wall_s, all_wall_s)."""
     from goskyr_spark.crawl.bloom import BloomSpec
@@ -164,7 +159,6 @@ def bench_crawl(
                 spark, wh_i, pages, cfg, robots=robots,
                 bloom_spec=BloomSpec(n_buckets=32, bits_per_bucket=1 << 18),
                 default_budget=500, round_seconds=900.0, n_salts=8, follow_links=True,
-                metrics=metrics,
             )
             run.init(spec.seed_urls())
             t0 = time.time()

@@ -227,16 +227,11 @@ class CrawlRun:
         n_salts: int = 8,
         follow_links: bool = False,
         user_agent: str = "goskyr",
-        metrics: str = "full",
         bloom_min_seen: int = 0,
         transport=None,
         salt_min_frontier: int = 50_000,
         aqe_min_frontier: int = 500_000,
     ):
-        # metrics: retained for API compatibility; since round 2 ALL
-        # per-round counts ride on the write actions via Observation and
-        # per-partition lineage comes from parquet footers, so "full"
-        # and "fast" cost the same (zero extra jobs per round).
         self.spark = spark
         self.warehouse = warehouse
         self.pages = pages
@@ -247,7 +242,6 @@ class CrawlRun:
         self.n_salts = n_salts
         self.follow_links = follow_links
         self.user_agent = user_agent
-        self.metrics = metrics
         # Engage the bloom pre-filter only once the seen set is at least
         # this large: below it, the exact anti-join alone is cheaper than
         # maintaining bitsets (at 10^10 URLs the bloom is mandatory; at
@@ -318,8 +312,7 @@ class CrawlRun:
         re-crawl requeues. The requeue subtraction happens on the EXACT
         side, so it composes with the bloom pre-filter (blooms cannot
         delete — a requeued URL is bloom-positive but survives the exact
-        verification; the cuckoo sketch in crawl/cuckoo.py is the
-        alternative for when even the exact table must stay sketched)."""
+        verification)."""
         # Rounds whose selected flush is still in flight (pipelined
         # sinks) contribute their CACHED DataFrame — never the parquet
         # dir, which may exist mid-write. The cache is materialized (the

@@ -76,23 +76,6 @@ class CoveredDateParts:
         )
 
 
-def check_for_double_date_parts(a: CoveredDateParts, b: CoveredDateParts) -> None:
-    for part in ("day", "month", "year", "time"):
-        if getattr(a, part) and getattr(b, part):
-            raise ValueError(f"date parsing error: '{part}' covered at least twice")
-
-
-def merge_date_parts(a: CoveredDateParts, b: CoveredDateParts) -> CoveredDateParts:
-    return CoveredDateParts(
-        day=a.day or b.day, month=a.month or b.month,
-        year=a.year or b.year, time=a.time or b.time,
-    )
-
-
-def has_all_date_parts(c: CoveredDateParts) -> bool:
-    return c.day and c.month and c.year and c.time
-
-
 def most_occ(items: list[str]) -> str:
     """utils.MostOcc (utils.go:59-73); first-seen wins ties."""
     if not items:

@@ -88,7 +88,18 @@ def url_slug(u: str) -> str:
 
 def canonical_url(raw: str) -> str:
     """Canonical form for the URL-seen set: lower-case scheme+host, strip
-    default port, strip fragment, strip trailing path slash."""
+    default port, strip fragment, strip trailing path slash. A fixed
+    point: one pass can uncover what a second would strip (``urlsplit``
+    drops leading C0 bytes only after ``str.strip`` ran, '\x08\xa00';
+    dropping the fragment bares trailing whitespace, '0 #'), so the pass
+    repeats until nothing changes: one extra pass for most inputs."""
+    out = _canonical_pass(raw)
+    while (nxt := _canonical_pass(out)) != out:
+        out = nxt
+    return out
+
+
+def _canonical_pass(raw: str) -> str:
     try:
         p = urlsplit(raw.strip())
     except ValueError:
@@ -143,7 +154,9 @@ def frontier_triple(u: str) -> tuple[str, str, str]:
             query = ""  # urlunsplit drops a bare '?' (empty query)
         canon = scheme + "://" + netloc + path.rstrip("/") + query
         host = netloc.partition(":")[0]
-    else:
+    # dropping '/', '?' or '#…' can bare Unicode whitespace the regex
+    # admits in the path ('http://x/a\xa0#f'); canonical_url strips it
+    if m is None or canon[-1].isspace():
         canon = canonical_url(u)
         host = host_of(canon)
     return canon, host, registrable_domain(host)

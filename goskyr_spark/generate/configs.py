@@ -143,15 +143,6 @@ def _go_escape(s: str) -> str:
     return "".join(out)
 
 
-def total_fields(recs: list[dict]) -> int:
-    n = 0
-    for rec in recs:
-        for v in rec.values():
-            if v is not None and v != "":
-                n += 1
-    return n
-
-
 @dataclass
 class GenOptions:
     """ConfigOptions (generate.go:301-325), offline subset."""

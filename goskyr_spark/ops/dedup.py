@@ -48,7 +48,10 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MERSENNE_P = (1 << 61) - 1
+# MinHash permutations are (a·h + b) mod p over the prime p = 2^31 − 1:
+# with h, a, b < p every row is a bijection of Z_p, and a·h + b < 2^62
+# cannot overflow a long (Spark 4 runs ANSI mode; overflow would throw).
+MERSENNE_P = (1 << 31) - 1
 
 # Planted-duplicate demo corpus: the driver's synthetic documents table
 # is duplicate-free at small SF, which would make exact-dedup oracles
@@ -246,33 +249,6 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- char
 
-def char_jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.92) -> DataFrame:
-    """Character-set Jaccard near-dup pairs, demo form: the self-join is
-    blocked on ``source`` (bounded blocks at sandbox SF; the sf0.01
-    oracle compares this form). The SCALE path is
-    ``char_jaccard_lsh_pairs`` below — same metric, candidates from
-    minhash banding instead of a blocked self-join."""
-    docs = _docs(spark, sf_dir).select(
-        "doc_id",
-        "source",
-        F.array_distinct(F.split("text", "")).alias("chars"),
-    )
-    a = docs.alias("a")
-    b = docs.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.chars"), F.col("b.chars")))
-    union = F.size(F.array_union(F.col("a.chars"), F.col("b.chars")))
-    jac = inter / union
-    return (
-        a.join(b, (F.col("a.source") == F.col("b.source")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(jac, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def char_jaccard_lsh_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -372,11 +348,8 @@ def minhash_signatures_from_shingles(
     import random
 
     rnd = random.Random(seed)
-    coeffs = [(rnd.randrange(1, 1 << 31), rnd.randrange(0, 1 << 31)) for _ in range(n_perm)]
+    coeffs = [(rnd.randrange(1, MERSENNE_P), rnd.randrange(0, MERSENNE_P)) for _ in range(n_perm)]
 
-    # h is reduced to 31 bits and a,b < 2^31 so a·h+b < 2^62 — no long
-    # overflow (Spark 4 runs ANSI mode; overflow would throw).
-    #
     # explode_outer + post-Generate null filter, NOT explode: plain
     # explode makes InferFiltersFromGenerate push `size(child) > 0 AND
     # isnotnull(child)` below the Generate, and when the shingle array
@@ -388,7 +361,7 @@ def minhash_signatures_from_shingles(
     sh = (
         shingles.select("doc_id", F.explode_outer("shingles").alias("sh64"))
         .filter(F.col("sh64").isNotNull())
-        .select("doc_id", F.pmod(F.col("sh64"), F.lit(1 << 31)).alias("h"))
+        .select("doc_id", F.pmod(F.col("sh64"), F.lit(MERSENNE_P)).alias("h"))
     )
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"mh{i}")
@@ -397,82 +370,40 @@ def minhash_signatures_from_shingles(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, n_perm: int = 64, shingle_k: int = 3, seed: int = 13) -> DataFrame:
-    """MinHash signatures straight from a docs table (no materialized
-    shingle reuse — the corpus-keyed entry points below prefer
-    ``shingle_table`` + ``minhash_signatures_from_shingles``)."""
-    return minhash_signatures_from_shingles(_shingle_arrays(docs, shingle_k), n_perm, seed)
-
-
-def _band_candidate_pairs(sig: DataFrame, id_col: str, n_perm: int, bands: int) -> DataFrame:
-    """(id, sig: array) → candidate pairs (a < b) sharing ≥1 LSH band
-    bucket: band values via ``stack`` → ONE groupBy-join keyed on
-    (band_idx, band_hash) — fan-out bounded by bucket sizes, never an
-    unblocked self-join."""
+def _minhash_bands(shingles: DataFrame, n_perm: int, bands: int) -> DataFrame:
+    """(doc_id, shingles) → (doc_id, band_idx, band_hash): the MinHash
+    signature (array-packed, which keeps whole-stage codegen compilation
+    linear in n_perm) cut into ``bands`` bands of n_perm/bands rows, each
+    hashed to one long and unpivoted with ``stack``. Two docs are LSH
+    candidates iff they share a (band_idx, band_hash) row."""
+    sig = minhash_signatures_from_shingles(shingles, n_perm).select(
+        "doc_id", F.array(*[f"mh{i}" for i in range(n_perm)]).alias("sig")
+    )
     rows_per_band = n_perm // bands
     band_cols = [
         F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band)).alias(f"band{b}")
         for b in range(bands)
     ]
-    banded = sig.select(id_col, *band_cols)
     stack_expr = "stack({}, {}) as (band_idx, band_hash)".format(
         bands, ", ".join(f"{b}, band{b}" for b in range(bands))
     )
-    long = banded.select(id_col, F.expr(stack_expr))
-    return (
-        long.alias("x")
-        .join(long.alias("y"), ["band_idx", "band_hash"])
-        .filter(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(F.col(f"x.{id_col}").alias("doc_a"), F.col(f"y.{id_col}").alias("doc_b"))
-        .distinct()
-    )
+    return sig.select("doc_id", *band_cols).select("doc_id", F.expr(stack_expr))
 
 
 def minhash_band_candidates(
     spark: SparkSession, sf_dir: str, n_perm: int = 64, bands: int = 16, shingle_k: int = 3
 ) -> DataFrame:
     """Candidate pairs (doc_a < doc_b) sharing at least one LSH band
-    bucket, built from the materialized shingle table. Signature is
-    array-packed (keeps whole-stage codegen compilation linear in
-    n_perm)."""
-    sig = minhash_signatures_from_shingles(
-        shingle_table(spark, sf_dir, shingle_k), n_perm
-    ).select("doc_id", F.array(*[f"mh{i}" for i in range(n_perm)]).alias("sig"))
-    return _band_candidate_pairs(sig, "doc_id", n_perm, bands)
-
-
-def minhash_est_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    n_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """MinHash + LSH with ESTIMATED Jaccard (fraction of matching
-    signature components) — the cheap screening form; estimator accuracy
-    is unit-tested against exact Jaccard (tests/test_ops.py). The
-    signature table is materialized once (write-once parquet, no
-    persist-leak) — it feeds both the banding and the estimator join."""
-    key = ("minhash_sig", os.path.abspath(sf_dir), n_perm, shingle_k)
-    sig = _materialized(
-        spark, key,
-        lambda: minhash_signatures_from_shingles(
-            shingle_table(spark, sf_dir, shingle_k), n_perm
-        ).select("doc_id", F.array(*[f"mh{i}" for i in range(n_perm)]).alias("sig")),
-    )
-    pairs = _band_candidate_pairs(sig, "doc_id", n_perm, bands)
-    siga = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
-    sigb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    matches = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    )
+    bucket, built from the materialized shingle table: ONE self-join
+    keyed on (band_idx, band_hash) — fan-out bounded by bucket sizes,
+    never an unblocked self-join."""
+    long = _minhash_bands(shingle_table(spark, sf_dir, shingle_k), n_perm, bands)
     return (
-        pairs.join(siga, "doc_a")
-        .join(sigb, "doc_b")
-        .withColumn("est_jaccard", F.round(matches / F.lit(n_perm), 4))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
+        long.alias("x")
+        .join(long.alias("y"), ["band_idx", "band_hash"])
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
+        .distinct()
     )
 
 
@@ -967,22 +898,9 @@ def minhash_band_index(
     probes co-locate without shuffling the index; rebuilt only when the
     corpus snapshot changes, never per arriving batch."""
     key = ("mh_band_index", _corpus_token(sf_dir, "documents.parquet"), n_perm, bands, shingle_k)
-
-    def build():
-        sig = minhash_signatures_from_shingles(
-            shingle_table(spark, sf_dir, shingle_k), n_perm
-        ).select("doc_id", F.array(*[f"mh{i}" for i in range(n_perm)]).alias("sig"))
-        rows_per_band = n_perm // bands
-        band_cols = [
-            F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band)).alias(f"band{b}")
-            for b in range(bands)
-        ]
-        stack_expr = "stack({}, {}) as (band_idx, band_hash)".format(
-            bands, ", ".join(f"{b}, band{b}" for b in range(bands))
-        )
-        return sig.select("doc_id", *band_cols).select("doc_id", F.expr(stack_expr))
-
-    return _materialized(spark, key, build)
+    return _materialized(
+        spark, key, lambda: _minhash_bands(shingle_table(spark, sf_dir, shingle_k), n_perm, bands)
+    )
 
 
 def incremental_dedup(
@@ -1014,19 +932,8 @@ def incremental_dedup(
     # (no-op at production batch sizes, same as the corpus builds)
     batch = _incr_batch(_docs_spread(spark, sf_dir))
     batch_sh = _shingle_arrays(batch, shingle_k)
-    sig = minhash_signatures_from_shingles(batch_sh, n_perm).select(
-        "doc_id", F.array(*[f"mh{i}" for i in range(n_perm)]).alias("sig")
-    )
-    rows_per_band = n_perm // bands
-    band_cols = [
-        F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band)).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    stack_expr = "stack({}, {}) as (band_idx, band_hash)".format(
-        bands, ", ".join(f"{b}, band{b}" for b in range(bands))
-    )
-    batch_banded = sig.select("doc_id", *band_cols).select(
-        F.col("doc_id").alias("new_doc_id"), F.expr(stack_expr)
+    batch_banded = _minhash_bands(batch_sh, n_perm, bands).withColumnRenamed(
+        "doc_id", "new_doc_id"
     )
     index = minhash_band_index(spark, sf_dir, n_perm, bands, shingle_k)
     cand = (

@@ -252,14 +252,3 @@ def image_embed_dedup(
         .filter(F.col("cosine") >= threshold)
         .select("asset_a", "asset_b", "cosine")
     )
-
-
-def documents_as_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The oracle-checkable fragment: treat document text as an opaque
-    binary payload and report its byte length (octet_length in DuckDB)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        "doc_id",
-        F.octet_length("text").alias("n_bytes"),
-        F.md5("text").alias("payload_md5"),
-    )

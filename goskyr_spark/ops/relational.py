@@ -67,21 +67,6 @@ def detail_page_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def frontier_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The north_rule frontier ∖ seen anti-join: orders with no lineitem
-    = 'URLs not yet fetched'."""
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    return (
-        orders.join(
-            lineitem.select("l_orderkey"),
-            orders["o_orderkey"] == lineitem["l_orderkey"],
-            "left_anti",
-        )
-        .select("o_orderkey", "o_custkey", F.col("o_totalprice").alias("totalprice"))
-    )
-
-
 def politeness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host budgeted priority queue (north_star): top-2 per key by
     priority with a total-order tiebreak — ``row_number() <= budget``."""
@@ -135,26 +120,6 @@ def guess_year_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_timestamp("ts").alias("ts_sec"),
         (F.unix_timestamp("ts") - F.lag(F.unix_timestamp("ts")).over(w)).alias("gap_sec"),
-    )
-
-
-def visited_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 visited-set dedup (``scrape/scrape.go:630-640``): first visit
-    per canonical key — min aggregation, one shuffle."""
-    events = _t(spark, sf_dir, "events")
-    return events.groupBy("user_id", "event_type").agg(
-        F.min(F.unix_timestamp("ts")).alias("first_ts_sec"),
-        F.count(F.lit(1)).alias("n_visits"),
-    )
-
-
-def frontier_merge_min_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """to_frontier's dedup-keep-best (rounds.py): min_by(struct) per key —
-    the earliest event row per user survives."""
-    events = _t(spark, sf_dir, "events")
-    return events.groupBy("user_id").agg(
-        F.min_by("event_id", F.struct("ts", "event_id")).alias("first_event_id"),
-        F.min(F.unix_timestamp("ts")).alias("first_ts_sec"),
     )
 
 

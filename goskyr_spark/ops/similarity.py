@@ -10,9 +10,9 @@
   its Hamming-1 neighbors for recall). At 100 TB the bucket column is a
   partition key of the embeddings table, so Catalyst partition-prunes
   the scan down to the probed buckets.
-* ``ivf_topk``         — IVF variant: k-means-style coarse centroids
-  (deterministically seeded sample), probe the ``n_probe`` nearest
-  cells. Same partition-pruning story with the cell id as key.
+* ``ivf_trained_topk`` — IVF variant: Lloyd-trained coarse centroids,
+  probe the ``n_probe`` nearest cells. Same partition-pruning story with
+  the cell id as key.
 
 All dot products run in DOUBLE (embeddings are cast up front): float32
 element products would round differently from the DuckDB oracle and
@@ -283,10 +283,10 @@ def trained_centroids(spark: SparkSession, sf_dir: str, n_cells: int = 8,
 
 def ivf_trained_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: int = 0,
                      n_cells: int = 8, n_probe: int = 2, n_iter: int = 3) -> DataFrame:
-    """IVF with Lloyd-trained centroids (see train_ivf_centroids) — the
-    production form of ``ivf_topk`` (whose fixed sample centroids keep
-    the driver-gate oracle replicable). Recall vs brute force is the
-    unit-test gate."""
+    """IVF ANN with Lloyd-trained centroids (see train_ivf_centroids):
+    each vector is assigned to its nearest centroid (``_with_cell``) and
+    the query probes its ``n_probe`` nearest cells. Output (vec_id, rank)
+    over the probed cells. Recall vs brute force is the unit-test gate."""
     emb = with_norm(_emb(spark, sf_dir))
     cents = trained_centroids(spark, sf_dir, n_cells, n_iter)
     q = query_vector(spark, sf_dir, query_id)
@@ -350,68 +350,6 @@ def ann_indexed_topk(spark: SparkSession, index_path: str, q: list[float], k: in
     cos = dot(F.col("embedding"), qcol) / (F.col("norm") * F.lit(qnorm))
     ranked = (
         emb.withColumn("cosine", cos)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return ranked.select("vec_id", F.row_number().over(w).alias("rank"))
-
-
-def ivf_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: int = 0,
-             n_cells: int = 8, n_probe: int = 2) -> DataFrame:
-    """IVF ANN: coarse centroids = a deterministic sample of the corpus
-    (ids 0..n_cells-1 — stand-in for trained k-means centers); each
-    vector is assigned to its nearest centroid (argmax over a broadcast
-    centroid array, first-wins on exact ties); the query probes its
-    ``n_probe`` nearest cells. Output (vec_id, rank) over the probed
-    cells; the DuckDB oracle replicates the assignment + probe logic."""
-    emb = with_norm(_emb(spark, sf_dir))
-    cents = (
-        emb.filter(F.col("vec_id") < n_cells)
-        .select("vec_id", "embedding", "norm")
-        .orderBy("vec_id")  # deterministic iteration order for first-wins ties
-        .collect()
-    )
-    q = query_vector(spark, sf_dir, query_id)
-    qnorm = sum(x * x for x in q) ** 0.5
-
-    # argmax over an ARRAY of the 8 cell similarities — each sim is
-    # evaluated once in its own projection (the multi-referenced
-    # non-trivial alias blocks CollapseProject). The previous when-chain
-    # (best = when(pair.s > best.s, pair).otherwise(best)) embedded the
-    # running `best` subtree TWICE per centroid — 2^n_cells copies of
-    # the first interpreted `aggregate` dot product. array_position
-    # takes the FIRST index achieving the max, preserving the chain's
-    # first-wins tie behavior (cents are ordered by vec_id).
-    sims = [
-        dot(F.col("embedding"), F.array(*[F.lit(float(x)) for x in c["embedding"]]))
-        / (F.col("norm") * F.lit(c["norm"]))
-        for c in cents
-    ]
-    cell_ids = F.array(*[F.lit(int(c["vec_id"])) for c in cents])
-    assigned = emb.select("*", F.array(*sims).alias("sims")).select(
-        "*",
-        # try_element_at: ANSI-safe if array_position ever returned 0
-        # (possible only with NaN sims, i.e. a zero-norm embedding)
-        F.try_element_at(
-            cell_ids, F.array_position(F.col("sims"), F.array_max("sims")).cast("int")
-        ).alias("cell"),
-    )
-
-    def cos_py(a, b):
-        import math
-
-        na = math.sqrt(sum(x * x for x in a))
-        nb = math.sqrt(sum(x * x for x in b))
-        return sum(x * y for x, y in zip(a, b)) / (na * nb)
-
-    probe = sorted(cents, key=lambda c: (-cos_py(q, list(c["embedding"])), c["vec_id"]))[:n_probe]
-    probe_ids = [int(c["vec_id"]) for c in probe]
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-    cos = dot(F.col("embedding"), qcol) / (F.col("norm") * F.lit(qnorm))
-    ranked = (
-        assigned.filter(F.col("cell").isin(probe_ids) & (F.col("vec_id") != query_id))
-        .withColumn("cosine", cos)
         .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )

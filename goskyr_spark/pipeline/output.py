@@ -139,17 +139,3 @@ class APIWriter:
 class _NoNetworkTransport:
     def request(self, *a, **k):  # pragma: no cover
         raise NotImplementedError("network transport not available in sandbox")
-
-
-# backwards-compatible alias (pre-round-2 name)
-APIWriterStub = APIWriter
-
-
-def write_records_df(records_df, path: str, fmt: str = "parquet") -> None:
-    """The scale sink: the records table goes to parquet (or json lines)
-    partitioned however the upstream job left it — no driver collect."""
-    w = records_df.write.mode("overwrite")
-    if fmt == "parquet":
-        w.parquet(path)
-    else:
-        w.json(path)

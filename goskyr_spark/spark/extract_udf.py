@@ -28,7 +28,6 @@ from ..extract.record import (
     ExtractError,
     PageDoc,
     URL_FIELD_NAME,
-    detail_pages,
     gq_document,
     _next_page_url,
     strip_http_header,
@@ -116,26 +115,3 @@ def explode_records(parsed: DataFrame, round_id: int = 0) -> DataFrame:
         .withColumn("record_idx", F.col("record_idx").cast("int"))
         .withColumn("round_id", F.lit(round_id).cast("int"))
     )
-
-
-def scrape_with_pages_df(pages: DataFrame, config_yaml: str, ref_time=None) -> list[dict]:
-    """Full-fidelity sequential scrape (pagination loop + detail pages)
-    against a pages DataFrame used as the page store — the Spark analogue
-    of goskyr's cache stack (``/root/reference/cmd/goskyr/main.go:156-160``).
-    Collects the needed pages host-side; used for golden-parity checks at
-    fixture scale, NOT the scale path (that's the crawl rounds)."""
-    from ..extract.record import scrape_page
-
-    cfg = Config.from_yaml(config_yaml)
-    page_map = {r["url"]: r["html"] for r in pages.select("url", "html").collect()}
-
-    def get_page(u):
-        b = page_map.get(u)
-        if b is None:
-            return None
-        return b.decode("utf-8", errors="replace") if isinstance(b, (bytes, bytearray)) else b
-
-    recs = scrape_page(cfg, cfg.scrapers[0], get_page, ref_time=ref_time)
-    if len(cfg.scrapers) > 1 and cfg.id.field:
-        detail_pages(cfg, cfg.scrapers[1], recs, get_page, ref_time=ref_time)
-    return recs

@@ -2,7 +2,8 @@
 
 Design targets (BASELINE.json north_rule): multi-executor cluster, AQE on
 for skew joins, Arrow for the pandas-UDF extraction path, shuffle
-partitions sized to cores in the sandbox (32 on local[32]); on a real
+partitions sized to cores in local mode (the cores this process may run
+on; ``SPARK_GRAFT_CPUS`` overrides); on a real
 cluster this is ``spark.sql.shuffle.partitions ≈ 2-3 × total cores`` and
 the same builder is used from ``spark-submit --py-files``.
 """
@@ -20,7 +21,7 @@ def build_session(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; on a cluster pass this explicitly (2-3× cores).

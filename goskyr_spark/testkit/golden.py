@@ -18,7 +18,15 @@ from ..config.model import Config, read_config
 from ..extract.record import detail_pages, scrape_page
 from ..extract.urlutil import url_slug
 
-REFERENCE_TESTDATA = "/root/reference/testdata"
+# The reference goskyr checkout: $GOSKYR_REFERENCE_ROOT, by default a
+# directory named ``reference`` next to this repository.
+# Tests that read it carry the ``requires_reference`` marker
+# (tests/conftest.py) and skip, naming this path, when it is absent.
+REFERENCE_ROOT = os.environ.get(
+    "GOSKYR_REFERENCE_ROOT",
+    os.path.abspath(os.path.join(os.path.dirname(__file__), "..", "..", "..", "reference")),
+)
+REFERENCE_TESTDATA = os.path.join(REFERENCE_ROOT, "testdata")
 
 
 def page_getter(cat_dir: str):

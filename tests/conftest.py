@@ -1,6 +1,32 @@
 from __future__ import annotations
 
+import os
+
 import pytest
+
+from goskyr_spark.testkit.golden import REFERENCE_ROOT, REFERENCE_TESTDATA
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "requires_reference: reads the reference goskyr checkout (GOSKYR_REFERENCE_ROOT)",
+    )
+
+
+def pytest_collection_modifyitems(config, items):
+    """Skip, with the path in the reason, every ``requires_reference``
+    test when the reference checkout is absent: the parity gates then
+    read as named skips, never as failures or vacuous passes."""
+    if os.path.isdir(REFERENCE_TESTDATA):
+        return
+    skip = pytest.mark.skip(
+        reason=f"reference checkout not found at {REFERENCE_ROOT} (set GOSKYR_REFERENCE_ROOT)"
+    )
+    for item in items:
+        if item.get_closest_marker("requires_reference"):
+            # prepend: an empty golden parameter set carries its own skip
+            item.add_marker(skip, append=False)
 
 
 @pytest.fixture(scope="session")

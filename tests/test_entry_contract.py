@@ -1,7 +1,7 @@
 """Driver-contract guards for __spark_entry__ and bench.py: every
 oracle references a real query, the no-oracle set stays exactly the
-documented exception list, and the bench roster only names registered
-queries. Cheap (no Spark jobs) — catches registration drift before the
+documented exception list, the roster fits the 50-row correctness
+window, and the bench roster only names registered queries. Cheap (no Spark jobs) — catches registration drift before the
 driver's correctness gate does."""
 
 from __future__ import annotations
@@ -22,6 +22,12 @@ def test_every_oracle_has_a_query():
 def test_no_oracle_set_is_exactly_the_documented_exceptions():
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
     assert set(qs) - set(osql) == ALLOWED_NO_ORACLE
+
+
+def test_roster_fits_the_correctness_window():
+    """The correctness capture holds at most 50 queries' rows; a larger
+    roster would leave its tail unjudged."""
+    assert len(entrymod.queries()) <= 50
 
 
 def test_bench_roster_subset_of_queries():

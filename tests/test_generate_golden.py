@@ -21,8 +21,9 @@ from goskyr_spark.config.model import read_config
 from goskyr_spark.extract.urlutil import url_slug
 from goskyr_spark.generate.pipeline import generate_for_fixture
 from goskyr_spark.generate.yamlout import dump_config
+from goskyr_spark.testkit.golden import REFERENCE_TESTDATA as REF
 
-REF = "/root/reference/testdata"
+pytestmark = pytest.mark.requires_reference
 
 # (category, url, require_string) — main_testdata.go:25-65, active rows only
 MATRIX = [
@@ -99,3 +100,8 @@ def test_generate_golden(cat, url, require_string):
             )
             failures.append(f"{cid}: {diff}")
     assert not failures, "\n".join(failures)
+
+
+def test_generate_golden_coverage():
+    # all 20 active matrix rows must find their golden configs
+    assert len(CASES) == 20

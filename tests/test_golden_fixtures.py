@@ -54,6 +54,8 @@ def _is_allowed(cfg_base: str, diff: str) -> bool:
 
 CASES = list(iter_golden_cases())
 
+pytestmark = pytest.mark.requires_reference
+
 
 @pytest.mark.parametrize(
     "cat,yml,jsn", CASES, ids=[os.path.basename(c[1])[:-4] for c in CASES]

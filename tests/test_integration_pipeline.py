@@ -7,7 +7,7 @@ two halves otherwise only meet in bench: the crawl/extract engine's
 RECORDS output is a valid documents input for the LLM-pipeline ops.
 
 Corpus: the quotes-toscrape-com scraping fixture set
-(/root/reference/testdata/scraping/) with the reference's golden config
+(``testdata/scraping/`` of the reference checkout) with the reference's golden config
 quotes-toscrape-com__n10aba — one list page (10 quote records) whose
 author links become detail fetches (8 distinct author pages, cached as
 fixtures by the reference's own test run, main_test.go).
@@ -25,9 +25,11 @@ from goskyr_spark.crawl.bloom import BloomSpec
 from goskyr_spark.crawl.rounds import CrawlRun
 from goskyr_spark.ops.trainprep import training_prep_docs
 from goskyr_spark.spark import schemas
-from goskyr_spark.testkit.golden import page_getter
+from goskyr_spark.testkit.golden import REFERENCE_TESTDATA, page_getter
 
-FIX = "/root/reference/testdata/scraping"
+pytestmark = pytest.mark.requires_reference
+
+FIX = f"{REFERENCE_TESTDATA}/scraping"
 YML = f"{FIX}/quotes-toscrape-com_configs/quotes-toscrape-com__n10aba.yml"
 GOLDEN = f"{FIX}/quotes-toscrape-com_configs/quotes-toscrape-com__n10aba.json"
 SEED = "https://quotes.toscrape.com"

@@ -3,6 +3,8 @@ pipeline of HTMLToMarkdown (scrape.go:2196-2221)."""
 
 from __future__ import annotations
 
+import pytest
+
 from goskyr_spark.config.model import Config
 from goskyr_spark.extract.markdown import html_to_markdown
 from goskyr_spark.extract.record import PageDoc, gq_document
@@ -168,11 +170,13 @@ def test_fieldname_roundtrip():
     assert compute_field_hash(" x ") == compute_field_hash("x")
 
 
+@pytest.mark.requires_reference
 def test_write_config_to_dir(tmp_path):
     from goskyr_spark.config.model import read_config
     from goskyr_spark.generate.yamlout import dump_config, write_config_to_dir
+    from goskyr_spark.testkit.golden import REFERENCE_TESTDATA
 
-    yml = "/root/reference/testdata/scraping/quotes-toscrape-com_configs/quotes-toscrape-com__n10aba.yml"
+    yml = f"{REFERENCE_TESTDATA}/scraping/quotes-toscrape-com_configs/quotes-toscrape-com__n10aba.yml"
     c = read_config(yml)
     c.records = [{"a": "1"}]
     write_config_to_dir(c, str(tmp_path))

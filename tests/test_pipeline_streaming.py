@@ -147,14 +147,19 @@ scrapers:
     assert dump_config(cfg2) == out  # emit is a fixpoint
 
 
+@pytest.mark.requires_reference
 def test_cli_scrape_matches_golden(tmp_path):
     """python -m goskyr_spark scrape on a reference fixture config."""
-    yml = "/root/reference/testdata/scraping/quotes-toscrape-com_configs/quotes-toscrape-com__n10aba.yml"
+    from goskyr_spark.testkit.golden import REFERENCE_TESTDATA
+
+    pages_dir = f"{REFERENCE_TESTDATA}/scraping"
+    yml = f"{pages_dir}/quotes-toscrape-com_configs/quotes-toscrape-com__n10aba.yml"
     out = tmp_path / "recs.json"
     r = subprocess.run(
         [sys.executable, "-m", "goskyr_spark", "scrape", yml,
-         "--pages-dir", "/root/reference/testdata/scraping", "--out", str(out)],
-        cwd="/root/repo", capture_output=True, text=True, timeout=120,
+         "--pages-dir", pages_dir, "--out", str(out)],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=120,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     got = json.load(open(out))

@@ -1,15 +1,14 @@
 """Property-based tests (hypothesis) for the pure kernels: URL
-canonicalization, bloom bit math, cuckoo round trips, robots defaults,
+canonicalization, bloom bit math, robots defaults,
 winnowing determinism."""
 
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from goskyr_spark.crawl.bloom import _positions, _set_bits, _test_bits
-from goskyr_spark.crawl.cuckoo import CuckooTable
 from goskyr_spark.crawl.robots import is_allowed
 from goskyr_spark.extract.urlutil import canonical_url, registrable_domain, url_slug
 
@@ -20,6 +19,8 @@ urls = st.one_of(
 
 
 @given(urls)
+@example("\x08\xa00")  # urlsplit drops the C0 byte after str.strip ran
+@example("0 #")  # dropping the fragment bares a trailing space
 @settings(max_examples=300, deadline=None)
 def test_canonical_url_idempotent(u):
     c = canonical_url(u)
@@ -50,14 +51,6 @@ def test_bloom_no_false_negatives_property(hashes):
     _set_bits(bits, _positions(h, m, k))
     assert _test_bits(bits, _positions(h, m, k)).all()
 
-
-@given(st.lists(st.integers(min_value=-(2**62), max_value=2**62), min_size=1, max_size=300, unique=True))
-@settings(max_examples=30, deadline=None)
-def test_cuckoo_insert_then_contains(keys):
-    t = CuckooTable(n_buckets=1 << 9, slots=4)
-    arr = np.array(keys, dtype=np.int64)
-    t.insert(arr)
-    assert t.contains(arr).all()
 
 
 @given(st.text(alphabet="abcdefg/.-*$", min_size=0, max_size=30))
@@ -93,6 +86,7 @@ def test_winnowing_subset_of_grams(text, k, window):
         fullmatch=True,
     ),
 ))
+@example("http://x.com/a\xa0#f")  # fast-path match whose canon ends in whitespace
 @settings(max_examples=500, deadline=None)
 def test_frontier_triple_equals_slow_pipeline(u):
     """frontier_triple's regex fast path must be byte-identical to the

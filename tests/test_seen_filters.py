@@ -1,4 +1,4 @@
-"""Bloom / cuckoo seen-set correctness and robots.txt admission rules."""
+"""Bloom seen-set correctness and robots.txt admission rules."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from goskyr_spark.crawl.bloom import BloomSpec, empty_blooms, filter_unseen, merge_blooms, split_by_bloom
-from goskyr_spark.crawl.cuckoo import CuckooTable, cuckoo_contains, cuckoo_update, empty_cuckoo
 from goskyr_spark.crawl.robots import crawl_delay, is_allowed, parse_robots
 
 
@@ -80,31 +79,6 @@ def test_hash_collision_does_not_suppress_url(spark):
     assert dedup_frontier(fr).count() == 2
 
 
-def test_cuckoo_insert_delete_contains_local():
-    t = CuckooTable(n_buckets=1 << 10, slots=4)
-    rng = np.random.default_rng(3)
-    keys = rng.integers(-(2**62), 2**62, size=2000, dtype=np.int64)
-    t.insert(keys)
-    assert t.contains(keys).all()
-    dels = keys[:500]
-    assert t.delete(dels) == 500
-    # deleted keys gone (cuckoo delete is exact for inserted items)
-    assert not t.contains(dels).any() or t.contains(dels).sum() < 25  # fp collisions only
-    assert t.contains(keys[500:]).all()
-
-
-def test_cuckoo_spark_update_and_membership(spark):
-    n_shards = 4
-    filters = empty_cuckoo(spark, n_shards=n_shards, n_buckets=1 << 10)
-    ins = spark.createDataFrame([(i * 7919 + 13,) for i in range(300)], "url_hash long")
-    filters = cuckoo_update(filters, ins, None, n_shards, n_buckets=1 << 10).cache()
-    tagged = cuckoo_contains(ins, filters, n_shards, n_buckets=1 << 10)
-    assert tagged.filter(~F.col("maybe_seen")).count() == 0
-    # delete half → membership drops for those
-    dels = spark.createDataFrame([(i * 7919 + 13,) for i in range(150)], "url_hash long")
-    filters2 = cuckoo_update(filters, None, dels, n_shards, n_buckets=1 << 10).cache()
-    still = cuckoo_contains(dels, filters2, n_shards, n_buckets=1 << 10)
-    assert still.filter(F.col("maybe_seen")).count() < 8  # fingerprint collisions only
 
 
 ROBOTS = """\

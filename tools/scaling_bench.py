@@ -69,7 +69,7 @@ for _ in range(repeats):
     run = CrawlRun(spark, wh, pages, cfg, robots=robots,
                    bloom_spec=BloomSpec(n_buckets=32, bits_per_bucket=1 << 18),
                    default_budget=2000, round_seconds=4000.0, n_salts=8,
-                   follow_links=True, metrics='fast', bloom_min_seen=100_000)
+                   follow_links=True, bloom_min_seen=100_000)
     run.init(spec.seed_urls())
     t0 = time.time()
     stats = run.run(max_rounds=100)

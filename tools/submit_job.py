@@ -43,7 +43,7 @@ def main() -> None:
         spec.config_yaml().replace("id: n08a", "id: n08a\n  field: link"),
         robots=generate_robots(spark, spec),
         bloom_spec=BloomSpec(n_buckets=16, bits_per_bucket=1 << 16),
-        default_budget=64, follow_links=True, metrics="fast",
+        default_budget=64, follow_links=True,
     )
     if run.resume_round() == 0:
         run.init(spec.seed_urls())
