@@ -166,11 +166,14 @@ def frame_sample_plan(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     the explode happens before decode so frame decoding parallelizes
     across the cluster rather than per-video."""
     vids = assets.filter(F.col("media_type") == "video")
-    return vids.select(
-        "asset_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("meta_duration_ms") - 1, F.lit(every_ms))
-        ).alias("frame_ts_ms"),
+    dur = F.col("meta_duration_ms")
+    # ANSI guard: a duration < 1 would make a descending sequence and fail
+    # the job; such a row (and a null duration) samples zero frames
+    frames = F.when(dur >= 1, F.sequence(F.lit(0), dur - 1, F.lit(every_ms))).otherwise(
+        F.array().cast("array<int>")
+    )
+    return vids.select("asset_id", F.explode_outer(frames).alias("frame_ts_ms")).filter(
+        F.col("frame_ts_ms").isNotNull()
     )
 
 
@@ -206,14 +209,15 @@ def image_embed_dedup(
     candidate generation over the image features → EXACT cosine verify
     — image near-duplicate pairs (asset_a, asset_b, cosine).
 
-    Scale shape: identical to ops/dedup.embedding_cosine_dups —
+    Scale shape: the dedup.cosine_dup_pairs core of embedding_cosine_dups —
     candidates are pairs sharing ≥1 of ``bands`` 8-bit sign-LSH band
     values (never an all-pairs join), cosines are verified in double on
     the candidate residue only. Exact re-uploads share every band, so
     their recall is 1 by construction. ``sf_dir`` is unused (the asset
     table is synthesized — no multimodal table in the driver corpus);
     kept for the queries() signature."""
-    from .similarity import dot, hyperplane_band_values_np, with_norm
+    from .dedup import cosine_dup_pairs
+    from .similarity import hyperplane_band_values_np, with_norm
 
     feats = extract_features(assets_with_planted_dups(spark, n), fake=True, dim=dim)
     e = with_norm(
@@ -228,27 +232,6 @@ def image_embed_dedup(
             F.col("embedding")
         ).alias("bv"),
     )
-    # posexplode_outer + isNotNull — never a bare explode over an
-    # inline-computed array (InferFiltersFromGenerate, see CLAUDE.md)
-    long = banded.select(
-        "vec_id", F.posexplode_outer("bv").alias("band_idx", "band_val")
-    ).filter(F.col("band_val").isNotNull())
-    cand = (
-        long.alias("x")
-        .join(long.alias("y"), ["band_idx", "band_val"])
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select(F.col("x.vec_id").alias("asset_a"), F.col("y.vec_id").alias("asset_b"))
-        .distinct()
-    )
-    ea = e.select(F.col("vec_id").alias("asset_a"), F.col("embedding").alias("emb_a"),
-                  F.col("norm").alias("norm_a"))
-    eb = e.select(F.col("vec_id").alias("asset_b"), F.col("embedding").alias("emb_b"),
-                  F.col("norm").alias("norm_b"))
-    cos = dot(F.col("emb_a"), F.col("emb_b")) / (F.col("norm_a") * F.col("norm_b"))
-    return (
-        cand.join(ea, "asset_a")
-        .join(eb, "asset_b")
-        .withColumn("cosine", F.round(cos, 4))
-        .filter(F.col("cosine") >= threshold)
-        .select("asset_a", "asset_b", "cosine")
+    return cosine_dup_pairs(e, banded, threshold).withColumnsRenamed(
+        {"vec_a": "asset_a", "vec_b": "asset_b"}
     )

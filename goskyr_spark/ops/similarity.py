@@ -137,25 +137,24 @@ def query_vector(spark: SparkSession, sf_dir: str, vec_id: int = 0) -> list[floa
     return list(row["embedding"])
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: int = 0) -> DataFrame:
-    """Brute-force cosine top-k vs the embedding of ``query_id``.
-    Output is rank + id only (floats stay internal → the DuckDB oracle
-    hash-compares exactly). Ties broken by vec_id: total order."""
-    q = query_vector(spark, sf_dir, query_id)
-    emb = with_norm(_emb(spark, sf_dir))
+def _rank_by_cosine(emb: DataFrame, q: list[float], k: int, query_id: int) -> DataFrame:
+    """(vec_id, rank) of the k rows most cosine-similar to ``q`` (query
+    row excluded; ties by vec_id — a total order the DuckDB oracles
+    replicate). Ranked over the k survivors, never a global sort."""
     qcol = F.array(*[F.lit(float(x)) for x in q])
     qnorm = sum(x * x for x in q) ** 0.5
     cos = dot(F.col("embedding"), qcol) / (F.col("norm") * F.lit(qnorm))
+    order = [F.desc("cosine"), F.asc("vec_id")]
     ranked = (
-        emb.filter(F.col("vec_id") != query_id)
-        .withColumn("cosine", cos)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
+        emb.filter(F.col("vec_id") != query_id).withColumn("cosine", cos).orderBy(*order).limit(k)
     )
-    # rank over the k survivors only (single partition of k rows, not a
-    # global sort of the corpus)
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return ranked.select("vec_id", F.row_number().over(w).alias("rank"))
+    return ranked.select("vec_id", F.row_number().over(Window.orderBy(*order)).alias("rank"))
+
+
+def cosine_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: int = 0) -> DataFrame:
+    """Brute-force cosine top-k vs the embedding of ``query_id``."""
+    q = query_vector(spark, sf_dir, query_id)
+    return _rank_by_cosine(with_norm(_emb(spark, sf_dir)), q, k, query_id)
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: int = 0,
@@ -176,8 +175,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: int = 
     emb = with_norm(_emb(spark, sf_dir)).withColumn(
         "bucket", hyperplane_bucket(F.col("embedding"), n_planes)
     )
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-    qnorm = sum(x * x for x in q) ** 0.5
     qbucket = (
         spark.createDataFrame([(q,)], "embedding array<double>")
         .select(hyperplane_bucket(F.col("embedding"), n_planes).alias("b"))
@@ -185,15 +182,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: int = 
     )
     probes = [b for b in range(1 << n_planes)
               if bin(b ^ qbucket).count("1") <= multiprobe_hamming]
-    cos = dot(F.col("embedding"), qcol) / (F.col("norm") * F.lit(qnorm))
-    ranked = (
-        emb.filter(F.col("bucket").isin(probes) & (F.col("vec_id") != query_id))
-        .withColumn("cosine", cos)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return ranked.select("vec_id", F.row_number().over(w).alias("rank"))
+    return _rank_by_cosine(emb.filter(F.col("bucket").isin(probes)), q, k, query_id)
 
 
 def _with_cell(emb: DataFrame, cent_list: list[list[float]]) -> DataFrame:
@@ -290,7 +279,6 @@ def ivf_trained_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: in
     emb = with_norm(_emb(spark, sf_dir))
     cents = trained_centroids(spark, sf_dir, n_cells, n_iter)
     q = query_vector(spark, sf_dir, query_id)
-    qnorm = sum(x * x for x in q) ** 0.5
 
     def cos_py(a, b):
         import math
@@ -304,54 +292,6 @@ def ivf_trained_topk(spark: SparkSession, sf_dir: str, k: int = 10, query_id: in
             enumerate(cents), key=lambda t: (-cos_py(q, t[1]), t[0])
         )[:n_probe]
     ]
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-    cos = dot(F.col("embedding"), qcol) / (F.col("norm") * F.lit(qnorm))
-    ranked = (
-        _with_cell(emb, cents)
-        .filter(F.col("cell").isin(probe_ids) & (F.col("vec_id") != query_id))
-        .withColumn("cosine", cos)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return ranked.select("vec_id", F.row_number().over(w).alias("rank"))
+    probed = _with_cell(emb, cents).filter(F.col("cell").isin(probe_ids))
+    return _rank_by_cosine(probed, q, k, query_id)
 
-
-def build_ann_index(emb: DataFrame, path: str, n_planes: int = 4, seed: int = PLANE_SEED,
-                    dim: int = 64) -> None:
-    """Materialize the embeddings table PARTITIONED BY sign-LSH bucket —
-    the scale form of the ANN index: a probe then partition-prunes the
-    scan to the probed buckets (tests/test_plans.py asserts the
-    PartitionFilters reach the scan). At 10^9 vectors raise n_planes so
-    bucket cardinality keeps partitions at ~100-500 MB."""
-    (
-        emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .withColumn("bucket", hyperplane_bucket(F.col("embedding"), n_planes, seed, dim))
-        .write.partitionBy("bucket")
-        .mode("overwrite")
-        .parquet(path)
-    )
-
-
-def ann_indexed_topk(spark: SparkSession, index_path: str, q: list[float], k: int = 10,
-                     n_planes: int = 4, multiprobe_hamming: int = 1) -> DataFrame:
-    """Top-k over a ``build_ann_index`` table: the bucket .isin filter is
-    a partition filter, so only the probed bucket directories are read."""
-    qnorm = sum(x * x for x in q) ** 0.5
-    qbucket = (
-        spark.createDataFrame([(q,)], "embedding array<double>")
-        .select(hyperplane_bucket(F.col("embedding"), n_planes).alias("b"))
-        .first()["b"]
-    )
-    probes = [b for b in range(1 << n_planes)
-              if bin(b ^ qbucket).count("1") <= multiprobe_hamming]
-    emb = with_norm(spark.read.parquet(index_path).filter(F.col("bucket").isin(probes)))
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-    cos = dot(F.col("embedding"), qcol) / (F.col("norm") * F.lit(qnorm))
-    ranked = (
-        emb.withColumn("cosine", cos)
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(k)
-    )
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return ranked.select("vec_id", F.row_number().over(w).alias("rank"))

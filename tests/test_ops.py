@@ -152,6 +152,72 @@ def test_char_jaccard_lsh_matches_blocked_form(spark, mini_docs):
     assert (100, 101) in got and (100, 102) in got
 
 
+def test_banded_pairs_equals_brute_force(spark):
+    """The shared LSH candidate core: banded_pairs must return exactly the
+    pairs that share a non-null value at the same band position (and,
+    with ``within``, the same cell) — null values never match, empty and
+    null arrays contribute nothing, equal values at different positions
+    or in different cells do not pair."""
+    from itertools import combinations
+
+    from goskyr_spark.ops.dedup import banded_pairs
+
+    rows = [
+        (1, 0, [5, 7, None]),
+        (2, 0, [5, 8, 9]),
+        (3, 0, []),
+        (4, 0, None),
+        (5, 1, [5, 7, 9]),       # equal values to 1 and 2, other cell
+        (6, 0, [None, 7, 1]),    # shares only position 1 with 1
+        (7, 0, [7, 5, 0]),       # 1's values, swapped positions
+        (8, 1, [None, None, 3]),
+        (9, 1, [None, None, 3]),
+    ]
+    sig = spark.createDataFrame(rows, "id long, cell int, bv array<int>")
+
+    def brute(within):
+        out = set()
+        for (i, ci, bi), (j, cj, bj) in combinations(rows, 2):
+            if within and ci != cj:
+                continue
+            if any(x is not None and x == y for x, y in zip(bi or [], bj or [])):
+                out.add((ci, min(i, j), max(i, j)) if within else (min(i, j), max(i, j)))
+        return out
+
+    flat = {(r["a"], r["b"]) for r in banded_pairs(sig, "id", "bv", ("a", "b")).collect()}
+    assert flat == brute(False)
+    assert (1, 5) in flat and (1, 7) not in flat
+    celled = {
+        (r["cell"], r["a"], r["b"])
+        for r in banded_pairs(sig, "id", "bv", ("a", "b"), within=("cell",)).collect()
+    }
+    assert celled == brute(True)
+    assert (1, 8, 9) in celled and not any(5 in (a, b) for _, a, b in celled)
+
+
+def test_verify_pairs_distinct_sides(spark):
+    """The incremental shape: left and right are different tables with
+    different id names; scores are rounded to 4 places and filtered."""
+    from goskyr_spark.ops.dedup import _jaccard, verify_pairs
+
+    batch = spark.createDataFrame(
+        [(10, [1, 2, 3, 4]), (11, [9]), (12, [1, 2])], "new_id long, sh array<long>"
+    )
+    corpus = spark.createDataFrame(
+        [(1, [1, 2, 3, 5, 6]), (2, [1, 2, 3, 4]), (3, [1, 2, 3])], "doc_id long, sh array<long>"
+    )
+    pairs = spark.createDataFrame(
+        [(10, 1), (10, 2), (11, 1), (12, 3)], "new_doc_id long, dup_of long"
+    )
+    got = {
+        (r["new_doc_id"], r["dup_of"]): r["j"]
+        for r in verify_pairs(
+            pairs, batch, corpus, _jaccard("sh_a", "sh_b"), "j", 0.5, "new_doc_id", "dup_of"
+        ).collect()
+    }
+    assert got == {(10, 1): 0.5, (10, 2): 1.0, (12, 3): 0.6667}
+
+
 def test_embedding_cosine_dups_planted(spark):
     """Planted exact-copy embeddings come back with cosine 1.0; the
     natural corpus contributes nothing at the 0.99 threshold."""
@@ -273,28 +339,6 @@ def test_ivf_trained_recall(spark):
     assert reg_recall >= 0.9, (reg_recall, exact, reg)
 
 
-def test_ann_indexed_topk_matches_unindexed(spark, tmp_path):
-    """The bucket-partitioned index path returns the same ranking as the
-    in-memory LSH scan (same planes, same probes)."""
-    from goskyr_spark.ops.similarity import (
-        _emb,
-        ann_indexed_topk,
-        ann_lsh_topk,
-        build_ann_index,
-        query_vector,
-    )
-
-    path = str(tmp_path / "ann_index")
-    build_ann_index(_emb(spark, SF), path, n_planes=4)
-    q = query_vector(spark, SF, 0)
-    got = [(r["vec_id"], r["rank"]) for r in ann_indexed_topk(spark, path, q, k=10).collect()]
-    # unindexed form excludes the query vector itself; drop it here too
-    want = [(r["vec_id"], r["rank"]) for r in ann_lsh_topk(spark, SF, k=10).collect()]
-    got_ids = [v for v, _ in got if v != 0]
-    want_ids = [v for v, _ in want]
-    assert got_ids[: len(want_ids)] == want_ids[: len(got_ids)]
-
-
 def test_doc_fingerprint_shape(spark, mini_docs):
     from goskyr_spark.ops.textstats import doc_fingerprint
 
@@ -326,11 +370,19 @@ def test_multimodal_feature_pipeline(spark):
     if _pil() is None:
         with pytest.raises(NotImplementedError):
             decode_image(b"xx")
-    # frame sampling plan: one row per sampled ts
-    plan = frame_sample_plan(assets, every_ms=10000)
+    # frame sampling plan: one row per sampled ts; a zero or negative
+    # duration samples zero frames instead of failing the job
+    from goskyr_spark.ops.multimodal import ASSET_SCHEMA
+
+    bad = spark.createDataFrame(
+        [(900, "video", b"x", None, None, 0), (901, "video", b"y", None, None, -5000)],
+        ASSET_SCHEMA,
+    )
+    plan = frame_sample_plan(assets.unionByName(bad), every_ms=10000)
     vids = assets.filter("media_type = 'video'").collect()
     want = sum(1 + (v["meta_duration_ms"] - 1) // 10000 for v in vids)
     assert plan.count() == want
+    assert plan.filter(F.col("asset_id") >= 900).count() == 0
 
 
 def test_multimodal_auto_mode_falls_back_without_pil(spark):

@@ -82,19 +82,27 @@ def test_near_dup_plans_have_no_unblocked_self_join(spark):
     be keyed on banding columns — never a cartesian/nested-loop pair
     blowup, and never a self-join blocked on a low-cardinality column
     alone."""
-    from goskyr_spark.ops.dedup import char_jaccard_lsh_pairs, embedding_cosine_dups, simhash_dup_pairs
+    from goskyr_spark.ops.dedup import (
+        char_jaccard_lsh_pairs,
+        embedding_cosine_dups,
+        incremental_dedup,
+        simhash_dup_pairs,
+    )
+    from goskyr_spark.ops.multimodal import image_embed_dedup
 
     for df in (
         char_jaccard_lsh_pairs(spark, SF),
         embedding_cosine_dups(spark, SF),
         simhash_dup_pairs(spark, SF),
+        image_embed_dedup(spark, SF),
+        incremental_dedup(spark, SF),
     ):
         plan = plan_of(df)
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
-        # candidate generation joins on the band key (minhash/embedding)
-        # or the Manku combination key (simhash)
-        assert "band_idx" in plan or "key_idx" in plan, plan
+        # candidate generation joins on the band key (minhash bands,
+        # Manku combination keys, hyperplane sign bands)
+        assert "band_idx" in plan, plan
 
 
 def test_semantic_dedup_joins_on_cell_only(spark):
@@ -132,27 +140,13 @@ def test_embedding_band_collision_rate_bounded(spark):
     """VERDICT r2 #2: 8-bit sign-LSH bands must keep the random-pair
     band-collision rate near the analytic 6/256 ≈ 2.3 % (the old 4-bit
     bands admitted ≈ 37 % of all pairs). Gate at ≤ 5 % of all pairs on
-    the natural sf0.01 embeddings (no planted copies)."""
-    from goskyr_spark.ops.dedup import embedding_cosine_dups
-    from goskyr_spark.ops.similarity import hyperplane_band_values
+    the natural sf0.01 embeddings (no planted copies), measured on the
+    production band table through the production candidate generator."""
+    from goskyr_spark.ops.dedup import banded_pairs, embedding_tables
 
-    sfd = "/root/testdata/sf0.01"
-    emb = spark.read.parquet(f"{sfd}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    n = emb.count()
-    bvals = hyperplane_band_values(F.col("embedding"))
-    banded = emb.select("vec_id", *[b.alias(f"band{i}") for i, b in enumerate(bvals)])
-    stack_expr = "stack(6, " + ", ".join(f"{b}, band{b}" for b in range(6)) + ") as (band_idx, band_val)"
-    long = banded.select("vec_id", F.expr(stack_expr))
-    cands = (
-        long.alias("x")
-        .join(long.alias("y"), ["band_idx", "band_val"])
-        .filter(F.col("x.vec_id") < F.col("y.vec_id"))
-        .select("x.vec_id", "y.vec_id")
-        .distinct()
-        .count()
-    )
+    e, banded = embedding_tables(spark, "/root/testdata/sf0.01", plant=False)
+    n = e.count()
+    cands = banded_pairs(banded, "vec_id", "bv", ("vec_a", "vec_b")).count()
     all_pairs = n * (n - 1) / 2
     assert cands <= 0.05 * all_pairs, f"{cands} candidates = {cands/all_pairs:.1%} of all pairs"
 

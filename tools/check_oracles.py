@@ -6,8 +6,10 @@ values. Usage: python tools/check_oracles.py [sf_dir] [name ...]"""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whatever copy sits elsewhere
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 import pandas as pd
