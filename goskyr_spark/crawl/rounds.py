@@ -49,6 +49,8 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -59,7 +61,7 @@ from ..extract.urlutil import frontier_triple
 from ..observability import LINEAGE_SCHEMA, MetricsLog, Tracer, parquet_lineage
 from ..spark import schemas
 from ..spark.extract_udf import explode_records, parse_pages
-from .bloom import BloomSpec, empty_blooms, filter_unseen, merge_blooms
+from .bloom import BLOOMS_SCHEMA, BloomSpec, merge_blooms, split_by_bloom
 from .politeness import carryover, select_under_budget
 from .robots import admit_robots, host_budgets
 
@@ -195,6 +197,42 @@ def dedup_frontier(df: DataFrame) -> DataFrame:
     ).select("s.*")
 
 
+def expand_outlinks(par: DataFrame, follow_links: bool) -> DataFrame:
+    """Parsed pages joined with their parent row (pprio, depth) → new
+    URLs (url, priority, depth) from ONE posexplode over
+    ``concat([next_url], detail_urls[, link_urls])``. The position picks
+    the priority class: 0 is the pagination link (pprio + 1), 1..|detail|
+    the detail pages in record order (DETAIL_BASE + pprio·1000 + i − 1),
+    the rest generic links (LINK_BASE + depth + 1). Null arrays count as
+    empty; null URLs are dropped (canonicalization cannot take them).
+
+    One generator keeps ``to_frontier``'s mapInPandas on a single child
+    — over a three-way union it ran one Python task per branch
+    partition, three times the tasks for the same rows."""
+    empty = F.array().cast("array<string>")
+    details = F.coalesce(F.col("detail_urls"), empty)
+    arrays = [F.array("next_url"), details]
+    if follow_links:
+        arrays.append(F.coalesce(F.col("link_urls"), empty))
+    pos, url = F.col("pos"), F.col("url")
+    return (
+        par.select(
+            F.posexplode_outer(F.concat(*arrays)).alias("pos", "url"),
+            F.size(details).alias("n_detail"), "pprio", "depth",
+        )
+        .filter(url.isNotNull())
+        .select(
+            url,
+            F.when(pos == 0, F.col("pprio") + F.lit(1.0))
+            .when(pos <= F.col("n_detail"),
+                  F.lit(DETAIL_BASE) + F.col("pprio") * 1000 + (pos - 1))
+            .otherwise(F.lit(LINK_BASE) + F.col("depth") + 1)
+            .alias("priority"),
+            (F.col("depth") + 1).alias("depth"),
+        )
+    )
+
+
 def admission_filter(frontier: DataFrame) -> DataFrame:
     """Scheme whitelist + media-extension blacklist
     (``/root/reference/scrape/scrape.go:2308-2323``) — pure Catalyst
@@ -268,8 +306,12 @@ class CrawlRun:
         self._pending = None
         self._bloom_fut = None
         self._inflight_selected: dict[int, DataFrame] = {}
+        # caches of the running round until its finalize takes them over
+        self._round_caches: list[DataFrame] = []
         self._next_hint: tuple[int, int] | None = None
         self.metrics_log = MetricsLog(warehouse)
+        # plan only: cached by the first round that reads it
+        # (_round_budgets), released when run() returns
         self.budgets = (
             host_budgets(robots, user_agent, round_seconds, default_budget)
             if robots is not None
@@ -476,8 +518,34 @@ class CrawlRun:
         per round at 8 cores on the 600-host corpus — while its skew
         handling only matters at production round sizes, where the
         threshold leaves it on. Physical-plan-only: results identical
-        either way (tests/test_crawl_rounds.py::test_aqe_toggle_equivalence)."""
+        either way (tests/test_crawl_rounds.py::test_aqe_toggle_equivalence).
+
+        Cost model: at sandbox and tail-round sizes a round costs what
+        its PYTHON TASKS cost, not what its rows cost. Each task that
+        evaluates a Python operator pays ~0.3-0.4 s of worker-side fixed
+        cost on a 4-vCPU host (per-task worker set-up; among it PySpark's
+        per-task ``importlib.invalidate_caches()`` re-reads ~28k zip
+        directory entries of pyspark.zip and the spark-core jar), so a
+        16-partition identity mapInPandas takes 1.6 s where the same
+        stage without Python takes 0.1 s. Hence the invariant: every Python operator
+        runs ONCE per round. The robots ``allowed`` UDF and the bloom
+        ``split_by_bloom`` cogroup run inside one cached admission
+        relation that the selected set, the carryover and the maybe-seen
+        exact anti-join all read; ``host_budgets`` is cached once per
+        ``run()``; outlinks reach ``to_frontier`` through one generator,
+        not a union; and no critical job builds a bloom — the bitset a
+        round reads was written by the previous round's async bloom
+        flush (the first one from seen ∪ selected).
+
+        Every job carries the job group and description
+        ``round=N/<name>``: ``critical`` on the driver thread,
+        ``selected_flush``/``records_flush``/``bloom_merge`` on the
+        flush threads (thread-local properties; no job, no conf)."""
         t0 = time.time()
+        with self._job_tag(rnd, "critical"):
+            return self._run_round(rnd, t0, _defer)
+
+    def _run_round(self, rnd: int, t0: float, defer: bool) -> dict:
         spark = self.spark
         frontier = self._read("frontier", rnd, FRONTIER_B)
         n_frontier = self._frontier_count_hint(rnd)
@@ -508,9 +576,45 @@ class CrawlRun:
             target = max(8, min(int(shp_prev), (n_frontier + 1999) // 2000))
             spark.conf.set("spark.sql.shuffle.partitions", str(target))
         try:
-            return self._round_body(rnd, t0, frontier, n_frontier, defer=_defer)
+            return self._round_body(rnd, t0, frontier, n_frontier, defer=defer)
+        except BaseException:
+            self._abort_round(rnd)
+            raise
         finally:
             self._restore_conf()  # idempotent -- body restores after its job
+
+    def _abort_round(self, rnd: int) -> None:
+        """A failed round commits nothing: release the caches it made
+        (dependents first) and its in-flight seen delta, and land the
+        previous round's deferred commit so a retry resumes here."""
+        self._inflight_selected.pop(rnd, None)
+        while self._round_caches:
+            self._round_caches.pop().unpersist()
+        self._drain_pending()
+
+    @contextmanager
+    def _job_tag(self, rnd: int, name: str):
+        """Job group + description ``round=N/name`` on every job the
+        calling thread submits inside the block; the thread's previous
+        values come back afterwards."""
+        sc = self.spark.sparkContext
+        keys = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+        prev = [sc.getLocalProperty(k) for k in keys]
+        tag = f"round={rnd}/{name}"
+        sc.setJobGroup(tag, tag)
+        try:
+            yield
+        finally:
+            for k, v in zip(keys, prev):
+                sc.setLocalProperty(k, v)
+
+    def _round_budgets(self) -> DataFrame | None:
+        """``host_budgets`` cached on first use: its pandas UDF runs in
+        the first round's budget broadcast; later rounds broadcast the
+        cached rows."""
+        if self.budgets is not None and not self.budgets.is_cached:
+            self.budgets.cache()
+        return self.budgets
 
     def _restore_conf(self) -> None:
         """Restore the session conf captured by run_round. Called by
@@ -539,45 +643,54 @@ class CrawlRun:
 
         has_seen = self._has_seen(rnd - 1)
         seen = self._seen_all(rnd - 1) if has_seen else None
-        use_bloom = has_seen and self._cum_seen >= self.bloom_min_seen
         blooms = None
-        if not has_seen:
-            # round 0 (or nothing committed yet): the seen set is
-            # provably empty — skip the anti-join job entirely
-            unseen = admitted
-        elif use_bloom:
+        if has_seen and self._cum_seen >= self.bloom_min_seen:
             # the previous round's bloom flush runs asynchronously —
             # wait for it before READING the blooms table (the only
-            # cross-round dependency the pipelined sinks introduce)
-            self._wait_bloom_flush()
-            if rnd > 0 and os.path.exists(self._p("blooms", rnd - 1)):
+            # cross-round dependency the pipelined sinks introduce).
+            # No bitset yet (the bloom engages this round, or a resumed
+            # warehouse lacks it): exact check only, and this round's
+            # flush writes the first bitset.
+            with tracer.span("bloom_wait"):
+                self._wait_bloom_flush()
+            if os.path.exists(self._p("blooms", rnd - 1)):
                 blooms = spark.read.parquet(self._p("blooms", rnd - 1))
-            else:
-                blooms = merge_blooms(empty_blooms(spark, spec), seen, spec)
-            unseen = filter_unseen(admitted, blooms, seen, spec)
+
+        # ADMISSION CACHE: robots-admitted candidates tagged maybe_seen
+        # (bloom-positive; without a bitset, every row once a seen set
+        # exists). The selected set, the carryover and the exact
+        # anti-join all read it, so the robots UDF and the bloom cogroup
+        # run once per round; released right after the critical job.
+        if blooms is not None:
+            cand = split_by_bloom(admitted, blooms, spec)
         else:
+            cand = admitted.withColumn("maybe_seen", F.lit(has_seen))
+        self._round_caches = [cand.cache()]
+        unseen = cand.filter(~F.col("maybe_seen")).drop("maybe_seen")
+        if has_seen:
             # seen grows without bound — it must NEVER be a driver
             # broadcast (at 10^10 URLs it is terabytes; in the sandbox a
             # few hundred k rows already OOMed an 8g driver when Catalyst
             # picked broadcast from parquet size stats). shuffle_hash
             # pins a shuffled hash join: co-partitioned, no sort, no
             # driver materialization.
-            unseen = admitted.join(
+            verified = cand.filter(F.col("maybe_seen")).drop("maybe_seen").join(
                 seen.select("url_hash", "url").hint("shuffle_hash"),
                 ["url_hash", "url"],
                 "left_anti",
             )
+            unseen = unseen.unionByName(verified)
 
         obs_sel = Observation()
         selected = (
             select_under_budget(
-                unseen, self.budgets, self.default_budget, self.n_salts,
+                unseen, self._round_budgets(), self.default_budget, self.n_salts,
                 salted=n_frontier > self.salt_min_frontier,
             )
             .withColumn("round_id", F.lit(rnd).cast("int"))
             .observe(obs_sel, F.count(F.lit(1)).alias("n"))
         )
-        selected.cache()
+        self._round_caches.append(selected.cache())
         # The selected write is a PURE SINK too: the parse below reads
         # the cache, and the next round's seen-set reads the cached
         # DataFrame via _inflight_selected until the flush lands. It is
@@ -593,7 +706,7 @@ class CrawlRun:
         fetched = self._fetch(selected)
         got = fetched.filter(F.col("html").isNotNull())
         parsed = parse_pages(got, self.config_yaml)
-        parsed.cache()
+        self._round_caches.append(parsed.cache())
 
         # FRONTIER EXPANSION is the round's ONE synchronous job: it
         # materializes the selected and parsed caches (schedule + fetch
@@ -607,34 +720,14 @@ class CrawlRun:
         # parsed and meta are both round-sized (~10^8 at scale): shuffle
         # hash, not broadcast
         par = parsed.join(meta.hint("shuffle_hash"), parsed["url"] == meta["parent_url"], "inner")
-        nexts = par.filter(F.col("next_url").isNotNull()).select(
-            F.col("next_url").alias("url"),
-            (F.col("pprio") + F.lit(1.0)).alias("priority"),
-            (F.col("depth") + 1).alias("depth"),
-        )
-        details = par.select(
-            F.posexplode("detail_urls").alias("idx", "url"), "pprio", "depth"
-        ).select(
-            "url",
-            (F.lit(DETAIL_BASE) + F.col("pprio") * 1000 + F.col("idx")).alias("priority"),
-            (F.col("depth") + 1).alias("depth"),
-        )
-        new_urls = nexts.unionByName(details)
-        if self.follow_links:
-            links = par.select(F.explode("link_urls").alias("url"), "depth").select(
-                "url",
-                (F.lit(LINK_BASE) + F.col("depth") + 1).alias("priority"),
-                (F.col("depth") + 1).alias("depth"),
-            )
-            new_urls = new_urls.unionByName(links)
 
         # new URLs: canonicalize WITHOUT the intermediate dedup shuffle —
         # the dedup below over (carry ∪ new) subsumes it (carry rows are
         # unseen-by-construction, so the seen/selected anti-join applied
         # to the whole union is a no-op on them)
-        new_frontier = to_frontier(new_urls, spec, round_id=rnd + 1, dedup=False).withColumn(
-            "bucket", spec.bucket_col(F.col("url_hash"))
-        )
+        new_frontier = to_frontier(
+            expand_outlinks(par, self.follow_links), spec, round_id=rnd + 1, dedup=False
+        ).withColumn("bucket", spec.bucket_col(F.col("url_hash")))
         new_frontier = admission_filter(new_frontier)
         # exclude contains the whole seen set — same no-broadcast rule
         exclude = selected.select("url_hash", "url")
@@ -649,6 +742,9 @@ class CrawlRun:
         t_pf0 = time.time()
         with tracer.span("parse_frontier"):
             next_frontier.write.mode("overwrite").parquet(self._p("frontier", rnd + 1))
+        # selected and parsed hold everything the admission cache fed
+        cand.unpersist()
+        self._round_caches = [selected, parsed]
         n_next = int(obs_next.get["n"])
         n_selected = int(obs_sel.get["n"])  # observed by the fused job
         t_parse_frontier = time.time() - t_pf0
@@ -656,55 +752,6 @@ class CrawlRun:
         # overrides -- is done; restore BEFORE submitting the flush
         # threads so their plans never depend on round interleaving
         self._restore_conf()
-
-        # SINK FLUSHES: selected + records + blooms read only the caches
-        # the fused job just filled; nothing in round N+1's critical
-        # path reads them (the seen-set reads the cached selected via
-        # _inflight_selected; the bloom read waits explicitly, see
-        # _wait_bloom_flush). They run in helper threads (Spark sessions
-        # support concurrent actions) and the manifest commit — which
-        # must stay LAST for crash consistency — is deferred into
-        # ``finalize``, which a pipelined caller runs while the next
-        # round is underway.
-        from concurrent.futures import ThreadPoolExecutor
-
-        obs_rec = Observation()
-        records = explode_records(parsed, rnd).observe(
-            obs_rec, F.count(F.lit(1)).alias("n")
-        )
-        pool = ThreadPoolExecutor(3)
-
-        def _flush_selected():
-            with tracer.span("selected_flush", parent=round_sid):
-                (
-                    selected.drop("bucket")
-                    .withColumn("part_id", F.spark_partition_id())
-                    .write.mode("overwrite")
-                    .parquet(self._p("selected", rnd))
-                )
-
-        def _flush_records():
-            with tracer.span("records_flush", parent=round_sid):
-                (
-                    records.withColumn("part_id", F.spark_partition_id())
-                    .write.mode("overwrite")
-                    .parquet(self._p("records", rnd))
-                )
-
-        futs = [pool.submit(_flush_selected), pool.submit(_flush_records)]
-        if use_bloom:
-            seen_delta = selected.select(
-                "url_hash", self.spec.bucket_col(F.col("url_hash")).alias("bucket"),
-                F.col("round_id").alias("round_added"),
-            )
-            bloom_df = merge_blooms(blooms, seen_delta, spec)
-
-            def _flush_blooms():
-                with tracer.span("bloom_merge", parent=round_sid):
-                    bloom_df.write.mode("overwrite").parquet(self._p("blooms", rnd))
-
-            self._bloom_fut = pool.submit(_flush_blooms)
-            futs.append(self._bloom_fut)
 
         stats = {
             "round": rnd,
@@ -720,6 +767,62 @@ class CrawlRun:
         # next round's frontier count, driver-side (no job, no manifest
         # read — the manifest may still be uncommitted while pipelined)
         self._next_hint = (rnd + 1, n_next)
+        # the round span covers the CRITICAL PATH; the flush spans are
+        # parented to it and may outlive it (normal tracing semantics)
+        round_span.__exit__(None, None, None)
+        # commit ordering: the PREVIOUS round's deferred finalize (if
+        # any) must land its manifest before this round's does. Its
+        # flushes had this whole round to complete, so this is ~instant.
+        # Draining before this round's flushes also leaves every earlier
+        # visit log durable parquet for a first bitset's seen side —
+        # never a cache finalize has just released.
+        self._drain_pending()
+
+        # SINK FLUSHES: selected + records + blooms read only the caches
+        # the fused job just filled; nothing in round N+1's critical
+        # path reads them (the seen-set reads the cached selected via
+        # _inflight_selected; the bloom read waits explicitly, see
+        # _wait_bloom_flush). They run in helper threads (Spark sessions
+        # support concurrent actions) and the manifest commit — which
+        # must stay LAST for crash consistency — is deferred into
+        # ``finalize``, which a pipelined caller runs while the next
+        # round is underway.
+        pool = ThreadPoolExecutor(3)
+
+        def flush(name: str, df: DataFrame, table: str):
+            def write():
+                with tracer.span(name, parent=round_sid), self._job_tag(rnd, name):
+                    df.write.mode("overwrite").parquet(self._p(table, rnd))
+
+            return pool.submit(write)
+
+        futs = []
+        # The bitset is written by the round whose successor reads it (a
+        # non-empty next frontier at or past bloom_min_seen), so no
+        # critical job ever builds one; submitted first because the next
+        # round waits for it. Incremental from this round's bitset; when
+        # the bloom first engages, built from seen ∪ selected.
+        if n_next and self._cum_seen >= self.bloom_min_seen:
+            delta = selected.select(
+                "url_hash", spec.bucket_col(F.col("url_hash")).alias("bucket")
+            )
+            if blooms is None:
+                blooms = spark.createDataFrame([], BLOOMS_SCHEMA)
+                if has_seen:
+                    delta = self._seen_all(rnd - 1).select(*delta.columns).unionByName(delta)
+            self._bloom_fut = flush("bloom_merge", merge_blooms(blooms, delta, spec), "blooms")
+            futs.append(self._bloom_fut)
+        obs_rec = Observation()
+        records = explode_records(parsed, rnd).observe(
+            obs_rec, F.count(F.lit(1)).alias("n")
+        )
+        futs += [
+            flush("selected_flush",
+                  selected.drop("bucket").withColumn("part_id", F.spark_partition_id()),
+                  "selected"),
+            flush("records_flush",
+                  records.withColumn("part_id", F.spark_partition_id()), "records"),
+        ]
 
         def finalize():
             for f in futs:
@@ -749,13 +852,7 @@ class CrawlRun:
             for df in (selected, parsed):
                 df.unpersist()
 
-        # the round span covers the CRITICAL PATH; the flush spans are
-        # parented to it and may outlive it (normal tracing semantics)
-        round_span.__exit__(None, None, None)
-        # commit ordering: the PREVIOUS round's deferred finalize (if
-        # any) must land its manifest before this round's does. Its
-        # flushes had this whole round to complete, so this is ~instant.
-        self._drain_pending()
+        self._round_caches = []  # finalize owns selected and parsed now
         if defer:
             self._pending = finalize
             return stats
@@ -818,14 +915,18 @@ class CrawlRun:
                     self._cum_seen += max(0, json.load(fh)["stats"].get("selected", 0))
             except (OSError, KeyError, ValueError):
                 pass
-        while rnd < max_rounds:
-            stats = self.run_round(rnd, _defer=True)
-            out.append(stats)
-            if stats.get("done"):
-                break
-            rnd += 1
-        # land the last round's sink flushes + manifest
-        self._drain_pending()
+        try:
+            while rnd < max_rounds:
+                stats = self.run_round(rnd, _defer=True)
+                out.append(stats)
+                if stats.get("done"):
+                    break
+                rnd += 1
+            # land the last round's sink flushes + manifest
+            self._drain_pending()
+        finally:
+            if self.budgets is not None:
+                self.budgets.unpersist()
         return out
 
     # ---- result accessors ----

@@ -241,8 +241,19 @@ def test_bloom_on_off_equivalence(spark, tmp_path):
 
     with_bloom = crawl(str(tmp_path / "wb"), 0)
     without = crawl(str(tmp_path / "wo"), 10**9)
-    assert with_bloom[["url", "round_id", "visit_rank"]].values.tolist() == \
-        without[["url", "round_id", "visit_rank"]].values.tolist()
+    # third arm: the bloom engages mid-crawl. With the threshold between
+    # the round-0 and round-1 cumulative seen counts, round 0 writes no
+    # bitset, round 1 reads none and its flush builds the first one from
+    # seen ∪ selected, and round 2 filters through it.
+    per_round = without.groupby("round_id").size()
+    mid = int(per_round[0]) + 1
+    assert mid <= int(per_round[0] + per_round[1])
+    engaged = crawl(str(tmp_path / "wm"), mid)
+    assert not (tmp_path / "wm" / "blooms" / "round=0").exists()
+    assert (tmp_path / "wm" / "blooms" / "round=1").exists()
+    key = ["url", "round_id", "visit_rank"]
+    assert with_bloom[key].values.tolist() == without[key].values.tolist()
+    assert engaged[key].values.tolist() == without[key].values.tolist()
 
 
 def test_requeue_recrawl_exactly_once_more(spark, tmp_path):
@@ -505,3 +516,161 @@ def test_to_frontier_memo_overflow(spark, monkeypatch):
     finally:
         spark.conf.set(arrow_key, arrow_prev)
     assert overflowed == baseline
+
+
+def _outlinks_by_union(par, follow_links: bool):
+    """The three-branch next / detail / link union that
+    ``expand_outlinks`` replaced, as it was."""
+    from goskyr_spark.crawl.rounds import DETAIL_BASE, LINK_BASE
+
+    nexts = par.filter(F.col("next_url").isNotNull()).select(
+        F.col("next_url").alias("url"),
+        (F.col("pprio") + F.lit(1.0)).alias("priority"),
+        (F.col("depth") + 1).alias("depth"),
+    )
+    details = par.select(
+        F.posexplode("detail_urls").alias("idx", "url"), "pprio", "depth"
+    ).select(
+        "url",
+        (F.lit(DETAIL_BASE) + F.col("pprio") * 1000 + F.col("idx")).alias("priority"),
+        (F.col("depth") + 1).alias("depth"),
+    )
+    out = nexts.unionByName(details)
+    if follow_links:
+        out = out.unionByName(
+            par.select(F.explode("link_urls").alias("url"), "depth").select(
+                "url",
+                (F.lit(LINK_BASE) + F.col("depth") + 1).alias("priority"),
+                (F.col("depth") + 1).alias("depth"),
+            )
+        )
+    return out
+
+
+def test_expand_outlinks_equals_three_branch_union(spark):
+    """One posexplode over concat([next], details, links) yields the same
+    (url, priority, depth) multiset as the old three-branch union: null
+    next_url, null and empty arrays, null elements (which keep their
+    detail position), one URL in every class, links on and off. The old
+    union passed null URLs on, where canonicalization raised; the new
+    form drops them, so they leave the comparison."""
+    from collections import Counter
+
+    from goskyr_spark.crawl.rounds import expand_outlinks
+
+    rows = [
+        ("http://a.com/n1", ["http://a.com/d1", "http://a.com/d2"], ["http://a.com/l1"], 0.0, 0),
+        (None, ["http://a.com/d3"], ["http://a.com/l2", "http://a.com/l3"], 2.0, 1),
+        ("http://a.com/n2", None, ["http://a.com/l4"], 3.0, 2),
+        ("http://a.com/n3", [], None, 4.0, 0),
+        ("http://a.com/n4", ["http://a.com/d4", None, "http://a.com/d5"],
+         [None, "http://a.com/l5"], 5.0, 3),
+        (None, None, None, 6.0, 0),
+        ("http://a.com/x", ["http://a.com/x"], ["http://a.com/x", "http://a.com/x"], 7.0, 1),
+    ]
+    par = spark.createDataFrame(
+        rows,
+        "next_url string, detail_urls array<string>, link_urls array<string>, "
+        "pprio double, depth int",
+    )
+    for follow_links in (False, True):
+        got = Counter(tuple(r) for r in expand_outlinks(par, follow_links).collect())
+        want = Counter(
+            tuple(r)
+            for r in _outlinks_by_union(par, follow_links)
+            .filter(F.col("url").isNotNull()).collect()
+        )
+        assert got == want, follow_links
+        assert ("http://a.com/d5", 1_000_000.0 + 5000 + 2, 4) in got  # null kept its slot
+
+
+def test_failed_round_releases_caches_and_retries_clean(spark, corpus, tmp_path, monkeypatch):
+    """A round whose critical frontier write fails releases every cache
+    it made and its in-flight seen delta, and lands the previous round's
+    deferred commit; a retry then yields the uninterrupted visit log."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    spec, pages, robots = corpus
+
+    def mk(wh):
+        return CrawlRun(
+            spark, wh, pages, combined_config_yaml(spec), robots=robots,
+            bloom_spec=BloomSpec(n_buckets=8, bits_per_bucket=1 << 14),
+            default_budget=16, n_salts=4,
+        )
+
+    def log(run):
+        return run.visit_log().orderBy("round_id", "host", "visit_rank").toPandas()[
+            ["url", "round_id", "visit_rank"]].values.tolist()
+
+    ref = mk(str(tmp_path / "ref"))
+    ref.init(spec.seed_urls())
+    assert len(ref.run(max_rounds=30)) > 3
+    want = log(ref)
+
+    run = mk(str(tmp_path / "wh"))
+    run.init(spec.seed_urls())
+    fail_at = run._p("frontier", 3)  # round 2's critical output
+    write = DataFrameWriter.parquet
+
+    def failing_write(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)  # the job runs and fills the caches
+        if path == fail_at:
+            raise RuntimeError("injected frontier write failure")
+
+    jsc = spark.sparkContext._jsc
+    n_before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        run.run(max_rounds=30)
+    monkeypatch.undo()
+
+    assert run._inflight_selected == {}
+    assert jsc.getPersistentRDDs().size() == n_before
+    assert run.resume_round() == 2  # round 1 committed, round 2 did not
+    assert not os.path.exists(run._manifest(2))
+    run.run(max_rounds=30)
+    assert log(run) == want
+
+
+def test_round_jobs_carry_round_tags(spark, corpus, tmp_path):
+    """Every Spark job of a crawl carries its round's job group
+    ``round=N/<job>``: the critical job on the driver thread and each
+    sink flush on its pool thread (one job for each plain flush). The tags are
+    thread-local properties, so no job is added: the jobs run between
+    init() and the end of run() are exactly the tagged ones."""
+    spec, pages, robots = corpus
+    run = CrawlRun(
+        spark, str(tmp_path / "wht"), pages, combined_config_yaml(spec), robots=robots,
+        bloom_spec=BloomSpec(n_buckets=8, bits_per_bucket=1 << 14),
+        default_budget=16, n_salts=4,
+    )
+    run.init(spec.seed_urls())
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    untagged = set(tracker.getJobIdsForGroup(None))
+    last_init_job = max(untagged)  # init() wrote the round-0 frontier
+    stats = run.run(max_rounds=30)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    busy = [s for s in stats if s["frontier"]]
+    assert len(busy) > 2
+    for s in busy:
+        r = s["round"]
+
+        def jobs(name):  # tags repeat across crawls of one session
+            return [j for j in tracker.getJobIdsForGroup(f"round={r}/{name}")
+                    if j > last_init_job]
+
+        assert jobs("critical"), r
+        assert len(jobs("selected_flush")) == 1, r
+        assert len(jobs("records_flush")) == 1, r
+        # the bloom is written only for a successor with a frontier; its
+        # cogroup plans under the session's AQE, one job per query stage
+        assert bool(jobs("bloom_merge")) == bool(s["next_frontier"]), r
+        for j in jobs("critical"):
+            assert tracker.getJobInfo(j).status == "SUCCEEDED"
+    assert set(tracker.getJobIdsForGroup(None)) <= untagged
+    assert sc.getLocalProperty("spark.jobGroup.id") is None  # restored

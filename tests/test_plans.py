@@ -346,3 +346,87 @@ def test_pagerank_broadcasts_corpus_scalars(spark):
     plan = plan_of(pagerank(edges, iters=2))
     assert "BroadcastNestedLoopJoin" in plan, plan  # the 1-row crossJoins
     assert "CartesianProduct" not in plan, plan
+
+
+def _executed_nodes(plan, jvm, into_caches: bool = True) -> list[tuple]:
+    """(node, class name, output names, Python UDF names) for every node
+    a job over ``plan`` executes. With ``into_caches`` it descends once
+    into each cached relation whose buffers are not loaded yet (the job
+    computes it); a loaded cache is a leaf, its plan does not run."""
+    out, done, stack = [], set(), [plan]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        attrs = node.output()
+        udfs = []
+        if name in ("ArrowEvalPythonExec", "BatchEvalPythonExec"):
+            udfs = [node.udfs().apply(i).name() for i in range(node.udfs().size())]
+        out.append((node, name, {attrs.apply(i).name() for i in range(attrs.size())}, udfs))
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        if into_caches and name == "InMemoryTableScanExec":
+            builder = node.relation().cacheBuilder()
+            key = jvm.java.lang.System.identityHashCode(builder)
+            if key not in done and not builder.isCachedColumnBuffersLoaded():
+                done.add(key)
+                stack.append(node.relation().cachedPlan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_crawl_round_runs_each_python_operator_once(spark, tmp_path, monkeypatch):
+    """Round 1 of a crawl with robots and the bloom on: its critical job
+    evaluates the robots ``allowed`` UDF and the ``split_by_bloom``
+    cogroup exactly once (one cached admission relation feeds the
+    selected set, the carryover and the exact anti-join), builds no
+    bitset (the previous round's flush wrote it), and feeds
+    ``to_frontier``'s mapInPandas from one generator, not a union."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from goskyr_spark.crawl.bloom import BloomSpec
+    from goskyr_spark.crawl.rounds import CrawlRun
+    from goskyr_spark.spark.corpus import CorpusSpec, generate_pages, generate_robots
+
+    spec = CorpusSpec(n_hosts=4, list_pages_per_host=2, items_per_page=3, mega_factor=2, seed=7)
+    pages = generate_pages(spark, spec).cache()
+    pages.count()
+    wh = str(tmp_path / "wh")
+    run = CrawlRun(
+        spark, wh, pages, spec.config_yaml().replace("id: n08a", "id: n08a\n  field: link"),
+        robots=generate_robots(spark, spec),
+        bloom_spec=BloomSpec(n_buckets=8, bits_per_bucket=1 << 14),
+        default_budget=8, n_salts=4, follow_links=True,
+    )
+    critical = os.path.join(wh, "frontier", "round=2")  # round 1's critical write
+    captured = []
+    write = DataFrameWriter.parquet
+
+    def capturing_write(self, path, *args, **kwargs):
+        if path == critical:
+            captured.append(
+                _executed_nodes(self._df._jdf.queryExecution().executedPlan(), spark._jvm))
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capturing_write)
+    try:
+        run.init(spec.seed_urls())
+        run.run(max_rounds=2)
+    finally:
+        pages.unpersist()
+    (nodes,) = captured
+
+    allowed = [n for n in nodes if "allowed" in n[3]]
+    assert len(allowed) == 1, len(allowed)
+    cogroups = [n for n in nodes if n[1] == "FlatMapCoGroupsInPandasExec"]
+    assert [("maybe_seen" in n[2]) for n in cogroups] == [True], [n[2] for n in cogroups]
+    # the only cogroup is the membership test: no merge_blooms, and no
+    # empty_blooms mapInPandas either
+    assert not [n for n in nodes if n[1] == "MapInPandasExec" and "bits" in n[2]]
+    canon = [n for n in nodes
+             if n[1] == "MapInPandasExec" and {"url", "host", "domain"} <= n[2]]
+    assert len(canon) == 1
+    below = _executed_nodes(canon[0][0], spark._jvm, into_caches=False)
+    assert not [n for n in below if n[1] == "UnionExec"]
