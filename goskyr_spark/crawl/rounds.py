@@ -521,14 +521,19 @@ class CrawlRun:
         either way (tests/test_crawl_rounds.py::test_aqe_toggle_equivalence).
 
         Cost model: at sandbox and tail-round sizes a round costs what
-        its PYTHON TASKS cost, not what its rows cost. Each task that
-        evaluates a Python operator pays ~0.3-0.4 s of worker-side fixed
-        cost on a 4-vCPU host (per-task worker set-up; among it PySpark's
-        per-task ``importlib.invalidate_caches()`` re-reads ~28k zip
-        directory entries of pyspark.zip and the spark-core jar), so a
-        16-partition identity mapInPandas takes 1.6 s where the same
-        stage without Python takes 0.1 s. Hence the invariant: every Python operator
-        runs ONCE per round. The robots ``allowed`` UDF and the bloom
+        its PYTHON TASKS cost, not what its rows cost. PySpark calls
+        ``importlib.invalidate_caches()`` before every Python task, which
+        made each task re-read the directories of pyspark.zip, the py4j
+        zip and the spark-core jar (0.20-0.24 s of a ~0.3-0.4 s per-task
+        cost on a 4-vCPU host). The session's Python daemon
+        (``spark/pydaemon.py``) re-reads an archive only when its stat
+        stamp changes: that call now takes 2-3 ms, a steady-state task
+        ~65 ms run serially (was ~0.25 s), and a 16-partition identity
+        mapInPandas on 4 slots 0.6-0.8 s (was 1.3-1.7 s; the same stage
+        without Python 0.2 s). A freshly forked worker's first task
+        still pays ~0.4 s for importing pandas and pyarrow. Python tasks
+        remain the fixed cost, so every Python operator runs ONCE per
+        round. The robots ``allowed`` UDF and the bloom
         ``split_by_bloom`` cogroup run inside one cached admission
         relation that the selected set, the carryover and the maybe-seen
         exact anti-join all read; ``host_budgets`` is cached once per

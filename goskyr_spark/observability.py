@@ -19,10 +19,6 @@ small rounds):
   access (no data scan, no job).
 * ``MetricsLog`` — driver-side JSONL append (atomic rename), loaded as
   a DataFrame with ``load_metrics``. One row per (round, stage, metric).
-
-For Structured Streaming, ``attach_streaming_metrics`` registers a real
-``StreamingQueryListener`` that forwards per-batch progress (rows/sec,
-batch duration) into the same MetricsLog.
 """
 
 from __future__ import annotations
@@ -112,8 +108,7 @@ class MetricsLog:
         never committed (>= ``round_id``) before those rounds re-run —
         otherwise a crash after emit (or a restart re-running a round)
         leaves duplicate (round_id, stage) rows and ``load_metrics``
-        double-counts. Streaming rows (stage 'stream:*', whose round_id
-        is a batch id in a different sequence) are kept."""
+        double-counts."""
         if not os.path.exists(self.path):
             return
         kept = []
@@ -123,8 +118,7 @@ class MetricsLog:
                     row = json.loads(line)
                 except ValueError:
                     continue
-                stage = str(row.get("stage", ""))
-                if stage.startswith("stream:") or int(row.get("round_id", -1)) < round_id:
+                if int(row.get("round_id", -1)) < round_id:
                     kept.append(line)
         tmp = self.path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as fh:
@@ -235,34 +229,3 @@ def load_metrics(spark: SparkSession, warehouse: str) -> DataFrame:
         return spark.createDataFrame([], METRICS_SCHEMA)
     return spark.read.schema(METRICS_SCHEMA).json(path)
 
-
-def attach_streaming_metrics(spark: SparkSession, log: MetricsLog):
-    """Register a StreamingQueryListener (the PySpark streaming listener
-    API) forwarding per-batch progress into the MetricsLog. Returns the
-    listener (pass to ``spark.streams.removeListener`` to detach)."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    class _L(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            log.emit(-1, f"stream:{event.name or event.id}", "started", 1, "event")
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            log.emit(p.batchId, f"stream:{p.name or p.id}", "rows", p.numInputRows, "rows")
-            log.emit(
-                p.batchId,
-                f"stream:{p.name or p.id}",
-                "duration",
-                (p.batchDuration or 0) / 1000.0,
-                "sec",
-            )
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            log.emit(-1, f"stream:{event.id}", "terminated", 1, "event")
-
-    listener = _L()
-    spark.streams.addListener(listener)
-    return listener

@@ -4,15 +4,37 @@ Design targets (BASELINE.json north_rule): multi-executor cluster, AQE on
 for skew joins, Arrow for the pandas-UDF extraction path, shuffle
 partitions sized to cores in local mode (the cores this process may run
 on; ``SPARK_GRAFT_CPUS`` overrides); on a real
-cluster this is ``spark.sql.shuffle.partitions ≈ 2-3 × total cores`` and
-the same builder is used from ``spark-submit --py-files``.
+cluster this is ``spark.sql.shuffle.partitions ≈ 2-3 × total cores``.
+
+Python workers start from ``goskyr_spark.spark.pydaemon`` (PySpark's
+daemon with a stat-checked zip directory cache; see that module), so
+``goskyr_spark`` must be importable when the worker daemon starts, as
+unpickling the package's UDFs already requires. A package shipped only
+with ``--py-files`` is not on the daemon's path: ``tools/submit_job.py``
+builds its own session for that case.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+
+def master_cores(master: str, cpus: int) -> int:
+    """Task slots of a Spark master URL: N for ``local[N]`` and
+    ``local[N,F]``, ``cpus`` for ``*``, E×C for ``local-cluster[E,C,M]``,
+    1 for a bare ``local``; ``cpus`` for any other master."""
+    if master == "local":
+        return 1
+    m = re.fullmatch(r"local\[\s*(\*|\d+)\s*(?:,\s*\d+\s*)?\]", master)
+    if m:
+        return cpus if m[1] == "*" else int(m[1])
+    m = re.fullmatch(r"local-cluster\[\s*(\d+)\s*,\s*(\d+)\s*,\s*\d+\s*\]", master)
+    if m:
+        return int(m[1]) * int(m[2])
+    return cpus
 
 
 def build_session(
@@ -25,8 +47,7 @@ def build_session(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] → N; on a cluster pass this explicitly (2-3× cores).
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
-        shuffle_partitions = cpus if n in ("", "*") else int(n)
+        shuffle_partitions = master_cores(master, cpus)
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -42,6 +63,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.python.daemon.module", "goskyr_spark.spark.pydaemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
