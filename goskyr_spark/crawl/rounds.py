@@ -242,11 +242,34 @@ def admission_filter(frontier: DataFrame) -> DataFrame:
     throws INVALID_URL on any malformed frontier URL — one bad href on
     any crawled page would kill the whole round job. A null path (we
     could not parse the URL) counts as extension-pass; such URLs then
-    simply miss in the fetch join."""
-    path = F.lower(F.try_parse_url(F.col("url"), F.lit("PATH")))
-    ext_ok = path.isNull() | ~path.rlike("\\.(" + "|".join(e[1:] for e in _SKIP_EXT) + ")$")
+    simply miss in the fetch join.
+
+    The extension match is case-insensitive through the regex's ``(?i)``
+    flag, NOT ``lower(path)``: Catalyst's ``lower`` maps case through
+    ICU4J (``spark.sql.icu.caseMappings.enabled``, on by default), whose
+    first use in a JVM costs ~2 s (0.1-0.2 s warm) — and the crawl's
+    first round is that first use. Java's ``(?i)`` folds ASCII letters
+    only, which gives the same answer here: every listed extension is
+    ASCII, and the only non-ASCII code points whose lowercase contains an
+    ASCII letter (U+0130 → "i̇", U+212A → "k") cannot complete one."""
+    path = F.try_parse_url(F.col("url"), F.lit("PATH"))
+    ext_ok = path.isNull() | ~path.rlike(
+        "(?i)\\.(" + "|".join(e[1:] for e in _SKIP_EXT) + ")$")
     scheme_ok = F.col("url").startswith("http://") | F.col("url").startswith("https://")
     return frontier.filter(scheme_ok & ext_ok)
+
+
+def round_shuffle_partitions(n_frontier: int, session: int) -> int:
+    """Shuffle partitions for a small round (below ``aqe_min_frontier``):
+    one per 2000 frontier URLs, at least 8 so the parse stage stays
+    parallel, and never more than the session's own count — a tail round
+    at the full count pays per-task scheduling for mostly-empty
+    partitions across the ~10 stages of the fused job (measured 6-9 s
+    per job for 100-URL rounds at 32 partitions), and a floor above the
+    session count (8 on a 4-core session) runs every stage in two waves
+    over a few hundred rows. Plan-time only: results do not depend on
+    the partition count (gated by the visit-order equivalence tests)."""
+    return min(session, max(8, (n_frontier + 1999) // 2000))
 
 
 class CrawlRun:
@@ -383,7 +406,9 @@ class CrawlRun:
                 F.col("round_id").alias("round_added"),
             )
 
-        parts = ([as_seen(self.spark.read.parquet(*paths))] if paths else [])
+        # a fixed schema: inferring one launches a one-task job per read
+        visits = self.spark.read.schema("url string, url_hash long, round_id int")
+        parts = [as_seen(visits.parquet(*paths))] if paths else []
         parts += [as_seen(df) for df in inflight]
         seen = parts[0]
         for p in parts[1:]:
@@ -464,10 +489,14 @@ class CrawlRun:
                 F.lit(0).alias("depth"),
             )
             seeds = seeds.unionByName(sm)
+        obs = Observation()
         frontier = to_frontier(seeds, self.spec, round_id=0).withColumn(
             "bucket", self.spec.bucket_col(F.col("url_hash"))
-        )
+        ).observe(obs, F.count(F.lit(1)).alias("n"))
         frontier.write.mode("overwrite").parquet(self._p("frontier", 0))
+        # round 0's frontier size rides on the write: run_round(0) needs
+        # no count job
+        self._next_hint = (0, int(obs.get["n"]))
         os.makedirs(os.path.join(self.warehouse, "manifest"), exist_ok=True)
 
     def _frontier_count_hint(self, rnd: int) -> int | None:
@@ -475,7 +504,9 @@ class CrawlRun:
         frontier size — no job needed. In-memory first (the manifest may
         still be uncommitted while the previous round's sinks flush),
         then the committed manifest. Stale only if a requeue appended
-        rows after the commit (then recount)."""
+        rows after the commit (then recount). Round 0's size is the one
+        ``init`` observed on its frontier write; without it (a round 0
+        resumed by a fresh driver) the caller counts."""
         if self._next_hint is not None and self._next_hint[0] == rnd:
             return self._next_hint[1]
         if rnd == 0:
@@ -540,7 +571,15 @@ class CrawlRun:
         ``run()``; outlinks reach ``to_frontier`` through one generator,
         not a union; and no critical job builds a bloom — the bitset a
         round reads was written by the previous round's async bloom
-        flush (the first one from seen ∪ selected).
+        flush (the first one from seen ∪ selected). The other fixed cost
+        is a JVM's first use of an expression backed by a heavy library:
+        Catalyst's ``lower``/``upper``/``initcap`` map case through ICU4J,
+        which costs ~2 s the first time an executor JVM uses it (measured
+        1.9-2.6 s cold vs 0.1-0.2 s warm on 4 vCPUs; under a Python
+        operator the event log books it as Python run time), so no round
+        job uses them — ``admission_filter`` matches its extensions with
+        ``(?i)``. Round 0 runs no count job either: its frontier size is
+        an ``Observation`` on ``init``'s frontier write.
 
         Every job carries the job group and description
         ``round=N/<name>``: ``critical`` on the driver thread,
@@ -569,17 +608,8 @@ class CrawlRun:
         self._conf_prev = (aqe_prev, shp_prev)
         if n_frontier <= self.aqe_min_frontier:
             spark.conf.set("spark.sql.adaptive.enabled", "false")
-            # Right-size the round's shuffles to the frontier: a small/
-            # tail round at the full partition count pays per-task
-            # scheduling for mostly-empty partitions across the ~10
-            # stages of the fused job (measured 6-9 s/job for 100-URL
-            # rounds at 32 partitions). Floor of 8 keeps the parse
-            # stage parallel; production-size rounds (> aqe threshold)
-            # keep the session's full partition count. Plan-time only —
-            # results are partition-count-independent (gated by the
-            # visit-order equivalence tests).
-            target = max(8, min(int(shp_prev), (n_frontier + 1999) // 2000))
-            spark.conf.set("spark.sql.shuffle.partitions", str(target))
+            spark.conf.set("spark.sql.shuffle.partitions",
+                           str(round_shuffle_partitions(n_frontier, int(shp_prev))))
         try:
             return self._round_body(rnd, t0, frontier, n_frontier, defer=defer)
         except BaseException:
@@ -659,7 +689,7 @@ class CrawlRun:
             with tracer.span("bloom_wait"):
                 self._wait_bloom_flush()
             if os.path.exists(self._p("blooms", rnd - 1)):
-                blooms = spark.read.parquet(self._p("blooms", rnd - 1))
+                blooms = spark.read.schema(BLOOMS_SCHEMA).parquet(self._p("blooms", rnd - 1))
 
         # ADMISSION CACHE: robots-admitted candidates tagged maybe_seen
         # (bloom-positive; without a bitset, every row once a seen set

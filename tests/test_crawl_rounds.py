@@ -16,7 +16,12 @@ from pyspark.sql import functions as F
 
 from goskyr_spark.config.model import Config
 from goskyr_spark.crawl.bloom import BloomSpec
-from goskyr_spark.crawl.rounds import CrawlRun
+from goskyr_spark.crawl.rounds import (
+    _SKIP_EXT,
+    CrawlRun,
+    admission_filter,
+    round_shuffle_partitions,
+)
 from goskyr_spark.extract.record import detail_pages, scrape_page
 from goskyr_spark.extract.urlutil import canonical_url
 from goskyr_spark.spark.corpus import CorpusSpec, generate_pages, generate_robots
@@ -674,3 +679,83 @@ def test_round_jobs_carry_round_tags(spark, corpus, tmp_path):
             assert tracker.getJobInfo(j).status == "SUCCEEDED"
     assert set(tracker.getJobIdsForGroup(None)) <= untagged
     assert sc.getLocalProperty("spark.jobGroup.id") is None  # restored
+
+
+def _admission_urls() -> list[str | None]:
+    """Every skipped extension in four casings, bare and with a query, a
+    fragment or a trailing slash; near misses; non-ASCII letters whose
+    case mapping touches ASCII (U+0130, U+212A, U+017F) or looks like it
+    (full-width); an escaped dot; malformed, schemeless, null and empty."""
+    base = "https://h.example/a/file"
+    out: list[str | None] = []
+    for ext in _SKIP_EXT:
+        e = ext[1:]
+        alt = "".join(c.upper() if i % 2 else c for i, c in enumerate(e))
+        for cased in (e, e.upper(), e.capitalize(), alt):
+            for tail in ("", "?x=1", "#frag", "/", "?q=a.PDF"):
+                out.append(f"{base}.{cased}{tail}")
+        out.append(f"http://h.example/{e}")          # no dot
+        out.append(f"{base}.{e}x")                  # longer extension
+        out.append(f"{base}%2E{e}")                  # escaped dot
+    out += [
+        base + ".\u0130co", base + ".z\u0130p", base + ".jf\u0130f",   # İ → "i̇"
+        base + ".\u212Aml", base + ".\u212A",                          # Kelvin sign → "k"
+        base + ".c\u017F\u017F", base + ".\u017Fvg",                  # long s ſ
+        base + ".\uff50\uff44\uff46", base + ".\uff2a\uff30\uff27",    # full-width
+        base + ".html", base + ".PHP", base + "/", "https://h.example",
+        "https://h.example/a b.PNG", "https://h.example/%zz.gif", "http://[::1/x.jpg",
+        "https://h.example:99999/x.JPG", "ftp://h.example/x.html", "//h.example/x.html",
+        "mailto:a@b.example", "HTTPS://H.EXAMPLE/X.HTML", "", None,
+    ]
+    return out
+
+
+def test_admission_filter_matches_lowercase_form(spark):
+    """``admission_filter``'s ``(?i)`` match keeps exactly the rows the
+    ``lower(path)`` form it replaced keeps (that form costs a JVM ~2 s
+    of ICU start-up on first use; see the docstring)."""
+    urls = _admission_urls()
+    df = spark.createDataFrame([(i, u) for i, u in enumerate(urls)], "id int, url string")
+    path = F.lower(F.try_parse_url(F.col("url"), F.lit("PATH")))
+    ext = "\\.(" + "|".join(e[1:] for e in _SKIP_EXT) + ")$"
+    old = df.filter(
+        (F.col("url").startswith("http://") | F.col("url").startswith("https://"))
+        & (path.isNull() | ~path.rlike(ext))
+    )
+    got = {r.id for r in admission_filter(df).select("id").collect()}
+    want = {r.id for r in old.select("id").collect()}
+    assert got == want, sorted(urls[i] for i in got ^ want)
+    # every casing is dropped bare and with a query or fragment
+    assert want and len(urls) - len(want) >= 4 * 4 * len(_SKIP_EXT)
+
+
+def test_round_shuffle_partitions():
+    """A small round's shuffle partition count never exceeds the
+    session's own count; the floor of 8 applies only below it."""
+    assert round_shuffle_partitions(293, 4) == 4
+    assert round_shuffle_partitions(293, 32) == 8
+    assert round_shuffle_partitions(500_000, 32) == 32
+    assert round_shuffle_partitions(100, 8) == 8
+    assert round_shuffle_partitions(40_000, 32) == 20
+
+
+def test_round0_runs_no_count_job(spark, corpus, tmp_path, monkeypatch):
+    """``init`` observes the round-0 frontier size on its write, so
+    ``run_round(0)`` runs no ``DataFrame.count`` job."""
+    spec, pages, robots = corpus
+    run = CrawlRun(spark, str(tmp_path / "wh"), pages, combined_config_yaml(spec),
+                   robots=robots, default_budget=16)
+    run.init(spec.seed_urls())
+    counted = []
+    DataFrame = type(pages)  # the concrete class (classic or Connect)
+    count = DataFrame.count
+
+    def recording_count(self):
+        counted.append(self)
+        return count(self)
+
+    monkeypatch.setattr(DataFrame, "count", recording_count)
+    stats = run.run_round(0)
+    monkeypatch.undo()
+    assert counted == []
+    assert stats["frontier"] == spark.read.parquet(run._p("frontier", 0)).count() > 0

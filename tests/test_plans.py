@@ -375,13 +375,12 @@ def _executed_nodes(plan, jvm, into_caches: bool = True) -> list[tuple]:
     return out
 
 
-def test_crawl_round_runs_each_python_operator_once(spark, tmp_path, monkeypatch):
-    """Round 1 of a crawl with robots and the bloom on: its critical job
-    evaluates the robots ``allowed`` UDF and the ``split_by_bloom``
-    cogroup exactly once (one cached admission relation feeds the
-    selected set, the carryover and the exact anti-join), builds no
-    bitset (the previous round's flush wrote it), and feeds
-    ``to_frontier``'s mapInPandas from one generator, not a union."""
+@pytest.fixture(scope="module")
+def crawl_plans(spark, tmp_path_factory):
+    """Executed plans of a two-round crawl with robots and the bloom on,
+    keyed by the warehouse path each write goes to (``frontier/round=N``
+    is round N-1's critical job; ``selected``/``records``/``blooms``
+    ``/round=N`` are round N's sink flushes), relative to the warehouse."""
     import os
 
     from pyspark.sql.readwriter import DataFrameWriter
@@ -393,30 +392,39 @@ def test_crawl_round_runs_each_python_operator_once(spark, tmp_path, monkeypatch
     spec = CorpusSpec(n_hosts=4, list_pages_per_host=2, items_per_page=3, mega_factor=2, seed=7)
     pages = generate_pages(spark, spec).cache()
     pages.count()
-    wh = str(tmp_path / "wh")
+    wh = str(tmp_path_factory.mktemp("crawl_plans") / "wh")
     run = CrawlRun(
         spark, wh, pages, spec.config_yaml().replace("id: n08a", "id: n08a\n  field: link"),
         robots=generate_robots(spark, spec),
         bloom_spec=BloomSpec(n_buckets=8, bits_per_bucket=1 << 14),
         default_budget=8, n_salts=4, follow_links=True,
     )
-    critical = os.path.join(wh, "frontier", "round=2")  # round 1's critical write
-    captured = []
+    captured = {}
     write = DataFrameWriter.parquet
 
     def capturing_write(self, path, *args, **kwargs):
-        if path == critical:
-            captured.append(
-                _executed_nodes(self._df._jdf.queryExecution().executedPlan(), spark._jvm))
+        captured[os.path.relpath(path, wh)] = _executed_nodes(
+            self._df._jdf.queryExecution().executedPlan(), spark._jvm)
         return write(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", capturing_write)
-    try:
-        run.init(spec.seed_urls())
-        run.run(max_rounds=2)
-    finally:
-        pages.unpersist()
-    (nodes,) = captured
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", capturing_write)
+        try:
+            run.init(spec.seed_urls())
+            run.run(max_rounds=2)
+        finally:
+            pages.unpersist()
+    return captured
+
+
+def test_crawl_round_runs_each_python_operator_once(spark, crawl_plans):
+    """Round 1 of a crawl with robots and the bloom on: its critical job
+    evaluates the robots ``allowed`` UDF and the ``split_by_bloom``
+    cogroup exactly once (one cached admission relation feeds the
+    selected set, the carryover and the exact anti-join), builds no
+    bitset (the previous round's flush wrote it), and feeds
+    ``to_frontier``'s mapInPandas from one generator, not a union."""
+    nodes = crawl_plans["frontier/round=2"]  # round 1's critical write
 
     allowed = [n for n in nodes if "allowed" in n[3]]
     assert len(allowed) == 1, len(allowed)
@@ -430,3 +438,30 @@ def test_crawl_round_runs_each_python_operator_once(spark, tmp_path, monkeypatch
     assert len(canon) == 1
     below = _executed_nodes(canon[0][0], spark._jvm, into_caches=False)
     assert not [n for n in below if n[1] == "UnionExec"]
+
+
+def _expression_classes(node) -> set[str]:
+    """Class names of every expression node in one plan node."""
+    out, stack = set(), []
+    exprs = node.expressions()
+    stack.extend(exprs.apply(i) for i in range(exprs.size()))
+    while stack:
+        e = stack.pop()
+        out.add(e.getClass().getSimpleName())
+        kids = e.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_crawl_path_maps_no_case_through_icu(crawl_plans):
+    """No write of a crawl (init's seed frontier, the round-0/1 critical
+    jobs, the sink flushes) evaluates Catalyst's ``lower``/``upper``/
+    ``initcap``: they map case through ICU4J, whose first use costs an
+    executor JVM ~2 s, and the crawl is that first use.
+    ``admission_filter`` matches its extensions with ``(?i)`` instead."""
+    want = {"frontier/round=1", "frontier/round=2", "selected/round=0",
+            "records/round=0", "blooms/round=0", "selected/round=1", "records/round=1"}
+    assert want <= set(crawl_plans), sorted(crawl_plans)
+    for path, nodes in crawl_plans.items():
+        for node, name, _, _ in nodes:
+            assert not _expression_classes(node) & {"Lower", "Upper", "InitCap"}, (path, name)
